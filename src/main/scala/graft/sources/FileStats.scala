@@ -89,18 +89,29 @@ object FileStats {
     val ls = ls0.filter(_.value != null)
     if (ls.isEmpty) lit(false)
     else if (ls.length <= ExactInListProbes || !bloomed.contains(a))
-      ls.map { l =>
+      balancedOr(ls.map { l =>
         val bounds = col(minCol(a)) <= GraftBridge.column(l) &&
           GraftBridge.column(l) <= col(maxCol(a))
         if (bloomed.contains(a)) bounds && bloomMightContain(a, l) else bounds
-      }.reduce(_ || _)
+      })
     else {
-      val boundsOr = ls.map(l =>
+      val boundsOr = balancedOr(ls.map(l =>
         col(minCol(a)) <= GraftBridge.column(l) &&
-          GraftBridge.column(l) <= col(maxCol(a))).reduce(_ || _)
+          GraftBridge.column(l) <= col(maxCol(a))))
       boundsOr && bloomMightContainAny(a, ls)
     }
   }
+
+  /** OR of `cs` as a balanced tree: depth O(log n), where a left fold's
+    * depth is n and a few hundred IN-list literals overflow the stack of
+    * every recursive pass over the tree (Column conversion, analysis).
+    */
+  private def balancedOr(cs: Seq[Column]): Column =
+    if (cs.length == 1) cs.head
+    else {
+      val (l, r) = cs.splitAt(cs.length / 2)
+      balancedOr(l) || balancedOr(r)
+    }
 
   /** The analyzed+optimized row-level predicate of `data.where(cond)`:
     * every Filter condition the optimizer kept, conjoined. None when the

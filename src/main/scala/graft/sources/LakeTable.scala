@@ -3,7 +3,12 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
+import org.apache.spark.sql.catalyst.expressions.{BindReferences, Expression}
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -5298,12 +5303,12 @@ final class LakeTable(spark: SparkSession, val path: String) {
     }
     // verdict per STATTED file; files with no stats row are kept by
     // both strategies (missing map key / missing join partner)
-    def keepOver(stats: DataFrame): DataFrame = {
-      val statted = stats.columns.toSeq
+    def keepCols(columns: Seq[String]): Seq[Column] = {
+      val statted = columns
         .filter(_.endsWith("__graft_min")).map(_.stripSuffix("__graft_min")).toSet
-      val bloomed = stats.columns.toSeq
+      val bloomed = columns
         .filter(_.endsWith("__graft_bloom")).map(_.stripSuffix("__graft_bloom")).toSet
-      stats.select(
+      Seq(
         FileStats.schemelessFile(col(FileStats.FileCol)).as("__graft_rel"),
         coalesce(FileStats.canMatch(resolved, statted, bloomed), lit(false))
           .as("__graft_keep"))
@@ -5312,21 +5317,22 @@ final class LakeTable(spark: SparkSession, val path: String) {
       .get(LakeTable.PruneDriverThresholdKey, LakeTable.PruneDriverThresholdDefault)
       .toInt
     if (all.size <= threshold) {
-      // driver-side verdict, NO distributed action: the (signature-keyed)
-      // snapshot gives the stats rows, and evaluating the can-match
-      // projection over a LocalRelation collapses at optimization time
-      // (ConvertToLocalRelation) — collect() returns without a job
-      val (schema, rows) = LakeTable.statsSnapshot(spark, fs, statsDir)
-      val local = spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), schema)
-      val decided = keepOver(local).collect()
-        .map(r => r.getString(0) -> r.getBoolean(1)).toMap
+      // driver-side verdict, NO Spark action and no Dataset: the
+      // (signature-keyed) snapshot holds the stats rows as a
+      // LocalRelation, and the verdict projection is evaluated directly
+      // over its rows
+      val stats = LakeTable.statsSnapshot(spark, fs, statsDir)
+      val decided = LakeTable
+        .evalLocal(spark, stats, keepCols(stats.output.map(_.name)))
+        .map(r => Option(r(0)).map(_.toString).orNull -> (r(1) == true))
+        .toMap
       all.collect { case (rel, full) if decided.getOrElse(rel, true) => full }.toSeq
     } else {
       // the dir, not a part* glob: parquet skips _-prefixed files
       // itself, and the glob makes FileStreamSink's metadata probe
       // log a spurious FileNotFoundException warn per read
-      val keep = keepOver(spark.read.parquet(statsDir))
+      val stats = spark.read.parquet(statsDir)
+      val keep = stats.select(keepCols(stats.columns.toSeq): _*)
       val filesDf = spark.createDataFrame(all).toDF("__graft_rel", "__graft_full")
       filesDf.join(keep, Seq("__graft_rel"), "left")
         .where(coalesce(col("__graft_keep"), lit(true)))
@@ -5744,39 +5750,62 @@ object LakeTable {
   val MergeInListThresholdKey = "spark.graft.lake.mergeInListThreshold"
   val MergeInListThresholdDefault = "256"
 
-  /** Driver-side snapshot cache for SMALL stats tables (the
-    * under-[[PruneDriverThresholdKey]] prune path): (schema, rows) keyed
-    * by the stats dir's exact file signature — name, length, mtime of
-    * every parquet file — so any rewrite, including one by ANOTHER
-    * process, invalidates on the next call's listing. This is METADATA
-    * caching (the same class as Spark's file-listing cache), never query
-    * results: the prune verdict is recomputed from the rows per call.
-    * Payoff: repeat prunes against an unchanged stats version skip the
-    * per-call `spark.read.parquet(stats).collect()` — one distributed
-    * action per selective DML/readWhere saved, at any scale.
+  /** Stats rows the snapshot cache retains across all tables (one row
+    * per statted data file); least recently used tables go first.
     */
-  private val statsCache = new java.util.concurrent.ConcurrentHashMap[
-    String,
-    (String, org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row])]()
+  private val StatsCacheMaxRows = 65536L
+
+  /** Driver-side snapshot cache for SMALL stats tables (the
+    * under-[[PruneDriverThresholdKey]] prune path): the stats rows as a
+    * LocalRelation, keyed by the stats dir's exact file signature — name,
+    * length, mtime of every parquet file — so any rewrite, including one
+    * by ANOTHER process, invalidates on the next call's listing. This is
+    * METADATA caching (the same class as Spark's file-listing cache),
+    * never query results: the prune verdict is recomputed from the rows
+    * per call. Payoff: repeat prunes against an unchanged stats version
+    * skip the per-call `spark.read.parquet(stats).collect()` — one
+    * distributed action per selective DML/readWhere saved, at any scale.
+    */
+  private val statsCache = new StatsSnapshotCache(StatsCacheMaxRows)
 
   private[sources] def statsSnapshot(
       spark: org.apache.spark.sql.SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
-      statsDir: String): (org.apache.spark.sql.types.StructType, Array[org.apache.spark.sql.Row]) = {
+      statsDir: String): LocalRelation = {
     val sig = fs.listStatus(new org.apache.hadoop.fs.Path(statsDir))
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .sortBy(_.getPath.getName)
       .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
       .mkString("|")
-    val hit = statsCache.get(statsDir)
-    if (hit != null && hit._1 == sig) (hit._2, hit._3)
-    else {
+    statsCache.get(statsDir, sig).getOrElse {
       val df = spark.read.parquet(statsDir)
-      val rows = df.collect()
-      if (statsCache.size > 64) statsCache.clear() // bound the map, crudely
-      statsCache.put(statsDir, (sig, df.schema, rows))
-      (df.schema, rows)
+      val rel = LocalRelation.fromExternalRows(
+        DataTypeUtils.toAttributes(df.schema), df.collect().toSeq)
+      statsCache.put(statsDir, sig, rel)
+      rel
     }
+  }
+
+  /** Evaluate `cols` over the rows of `rel` on the driver, one output
+    * array per row: the projection is analyzed once, runtime-replaceable
+    * expressions are swapped for their replacements (the optimizer's
+    * `ReplaceExpressions`, without which they cannot evaluate), and the
+    * bound expressions are evaluated row by row — the same interpreted
+    * evaluation `ConvertToLocalRelation` would run, minus the Dataset
+    * encoder, the optimizer pass and the physical `collect`.
+    */
+  private[sources] def evalLocal(
+      spark: SparkSession, rel: LocalRelation, cols: Seq[Column]): Seq[Array[Any]] = {
+    val plan = Project(cols.map(GraftBridge.namedExpression(spark, _)), rel)
+    val analyzed = spark.sessionState.analyzer
+      .executeAndCheck(plan, new QueryPlanningTracker)
+    val exprs = ReplaceExpressions(analyzed) match {
+      case Project(list, child: LocalRelation) =>
+        list.map(BindReferences.bindReference(_: Expression, child.output))
+      case other =>
+        throw new IllegalStateException(s"unexpected analyzed stats projection:\n$other")
+    }
+    rel.data.map(r => exprs.map(_.eval(r)).toArray)
   }
 
   /** Fold the commit log into a checkpoint every N commits (see

@@ -87,18 +87,38 @@ object Ivf {
     val points = base
       .select(col(vecCol).cast("array<double>").as("v"))
       .where(col("v").isNotNull)
+      // each point's dimension and whether it holds a null element: both
+      // regimes reject bad vectors before the Lloyd loop
+      .select(col("v"), size(col("v")).as("dim"),
+        exists(col("v"), _.isNull).as("hasNull"))
     val cap = math.max(nCells, spark.conf
       .get(DriverFitMaxPointsKey, DriverFitMaxPointsDefault).toInt)
     // one bounded probe decides the regime AND feeds the local fit: a
     // result within the cap IS the whole fit set
-    val head = points.limit(cap + 1).collect().map(_.getSeq[Double](0).toArray)
+    val head = points.limit(cap + 1).collect()
     require(head.nonEmpty, "empty corpus")
     val mat: Array[Array[Double]] =
-      if (head.length <= cap) fitLocal(head, nCells, seed, iters)
-      else fitDistributed(points, nCells, seed, iters)
+      if (head.length <= cap) {
+        checkVectors(vecCol, head.map(_.getInt(1)).min, head.map(_.getInt(1)).max,
+          head.exists(_.getBoolean(2)))
+        fitLocal(head.map(_.getSeq[Double](0).toArray), nCells, seed, iters)
+      } else fitDistributed(points, vecCol, nCells, seed, iters)
     mat.zipWithIndex.map { case (cvec, cell) =>
       (cell, cvec.map(_.toFloat))
     }.toSeq.toDF("cell", "center")
+  }
+
+  /** Fail fast, naming the column, on a fit set k-means cannot measure:
+    * vectors of different dimensions, or a vector with a null element.
+    */
+  private def checkVectors(
+      vecCol: String, minDim: Int, maxDim: Int, hasNull: Boolean): Unit = {
+    require(minDim == maxDim,
+      s"k-means needs vectors of one dimension, but column '$vecCol' holds " +
+        s"vectors of dimension $minDim to $maxDim")
+    require(!hasNull,
+      s"k-means needs every vector element, but column '$vecCol' holds a " +
+        "vector with a null element")
   }
 
   /** Driver-local Lloyd over the full (bounded) fit set — exactly
@@ -154,9 +174,12 @@ object Ivf {
     * pass per iteration over the cached fit set.
     */
   private def fitDistributed(
-      points: DataFrame, nCells: Int, seed: Long, iters: Int): Array[Array[Double]] = {
+      points: DataFrame, vecCol: String, nCells: Int, seed: Long,
+      iters: Int): Array[Array[Double]] = {
     val cached = points.cache()
     try {
+      val shape = cached.agg(min("dim"), max("dim"), max("hasNull")).head()
+      checkVectors(vecCol, shape.getInt(0), shape.getInt(1), shape.getBoolean(2))
       val init = cached.dropDuplicates("v")
         .orderBy(xxhash64(col("v"), lit(seed)).asc)
         .limit(nCells)

@@ -1,6 +1,6 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, NamedExpression}
 
 /** Bridge into Spark's `private[sql]` Column <-> Expression converters.
   *
@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * [[graft.functions.CosineSimilarity]] as user-facing columns) goes
   * through `classic.ExpressionUtils`, which is `private[sql]`. This object
   * lives in the `org.apache.spark.sql` package purely to re-export those
-  * two entry points — the canonical pattern for Spark extension libraries.
+  * entry points — the canonical pattern for Spark extension libraries.
   */
 object GraftBridge {
 
@@ -18,6 +18,13 @@ object GraftBridge {
 
   def expression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** `c` as the session's converter builds it — a Catalyst tree the
+    * analyzer can resolve, where [[expression]] returns a wrapper only a
+    * Dataset's own projection resolves — named for a projection list.
+    */
+  def namedExpression(spark: SparkSession, c: Column): NamedExpression =
+    classic.ExpressionUtils.toNamed(spark.asInstanceOf[classic.SparkSession].expression(c))
 
   /** Register a builder in the session's temp function registry. */
   def registerFunction(

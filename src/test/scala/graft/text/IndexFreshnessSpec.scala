@@ -325,4 +325,33 @@ class IndexFreshnessSpec extends SparkSpec {
       .select("vec_id").as[Long].collect().toSet
     assert(got === gotRebuilt)
   }
+
+  test("BM25: applyChanges folds a 40-document batch of fresh terms") {
+    val root = freshRoot
+    def text(id: Long, fresh: Int) =
+      ((0 until fresh).map(j => s"w${id}x$j") :+ "shared" :+ s"g${id % 5}").mkString(" ")
+    val base = LakeTable(spark, s"$root/docs")
+      .write((1L to 100L).map(id => (id, text(id, 3))).toDF("doc_id", "text"))
+    val dir = s"$root/idx"
+    InvertedIndex.build(base, "doc_id", "text", dir)
+    // 40 new documents with 15 fresh terms each: the fold's pruned
+    // postings read carries a ~600-literal IN-list
+    base.upsert((101L to 140L).map(id => (id, text(id, 15))).toDF("doc_id", "text"),
+      Seq("doc_id"), changeFeed = true)
+    var failure: Throwable = null
+    val t = new Thread(() =>
+      try InvertedIndex.applyChanges(base, "doc_id", "text", dir)
+      catch { case e: Throwable => failure = e })
+    t.start() // the JVM's default thread stack size
+    t.join()
+    assert(failure === null, s"applyChanges failed: $failure")
+    val rebuilt = s"$root/idx2"
+    InvertedIndex.build(base, "doc_id", "text", rebuilt)
+    val queries = Seq(1L -> "w120x14", 1L -> "shared", 2L -> "g3", 3L -> "w7x1")
+    assert(served(dir, queries: _*).exists(_._3 == 120L))
+    assert(served(dir, queries: _*) === served(rebuilt, queries: _*))
+    def termsOf(d: String) = LakeTable(spark, s"$d/terms").read
+      .orderBy("term").as[(String, Long)].collect().toSeq
+    assert(termsOf(dir) === termsOf(rebuilt))
+  }
 }
