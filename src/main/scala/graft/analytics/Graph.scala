@@ -107,10 +107,10 @@ object Graph {
     * LOW-degree endpoint to its high-degree one (ties by id) — the
     * classic orientation that caps out-degrees near √m so the wedge
     * intermediate of [[triangleCount]] stays near-linear on skewed
-    * graphs. Exposed for [[graft.GraphProbe]], which records that
-    * intermediate's measured size against edge count.
+    * graphs (measured wedges per edge against edge count: the round-9
+    * triangle-count density table in BASELINE.md).
     */
-  private[graft] def orientEdges(edges: DataFrame): DataFrame = {
+  private def orientEdges(edges: DataFrame): DataFrame = {
     // canonical undirected edge set: a < b, no self-loops, distinct
     val und = edges.select(
         least(col("src"), col("dst")).as("a"),
@@ -148,10 +148,9 @@ object Graph {
   }
 
   /** The wedge intermediate over an [[orientEdges]] frame — the join
-    * whose size IS the algorithm's cost at scale. Shared by the count
-    * and the probe so the measured curve is the served plan's.
+    * whose size IS the algorithm's cost at scale.
     */
-  private[graft] def orientedWedges(oriented: DataFrame): DataFrame =
+  private def orientedWedges(oriented: DataFrame): DataFrame =
     oriented.as("e1")
       .join(oriented.as("e2"),
         col("e1.lo") === col("e2.lo") && col("e1.hi") < col("e2.hi"))

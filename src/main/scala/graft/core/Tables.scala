@@ -58,6 +58,16 @@ final class Tables(spark: SparkSession, sfDir: String) {
 object Tables {
   def apply(spark: SparkSession, sfDir: String): Tables = new Tables(spark, sfDir)
 
+  /** Bytes of scan input per spread partition. Only shapes scans SMALLER
+    * than the core count (the helper no-ops at real scale), where it
+    * stops a tiny input from being round-robined into `cores` near-empty
+    * shuffle blocks: the 8-vs-32-core scaling data showed exactly those
+    * queries running FASTER on fewer cores. ~64 KB of these text/orders
+    * tables is a few hundred rows — 100+ ms of tokenize-class CPU per
+    * task, amortizing the per-block exchange and scheduling cost.
+    */
+  private val SpreadTargetBytes: Long = 64L * 1024
+
   /** Spread an UNDER-PARTITIONED scan across the available cores before
     * CPU-heavy per-row work (tokenize/explode, shingle, hash-family,
     * sketch partial-aggregation). A single unsplittable parquet file
@@ -70,27 +80,12 @@ object Tables {
     * assignment is deterministic (Spark sorts before round-robin
     * repartition so retried tasks reproduce the assignment).
     */
-  /** Bytes of scan input per spread partition. Only shapes scans SMALLER
-    * than the core count (the helper no-ops at real scale), where it
-    * stops a tiny input from being round-robined into `cores` near-empty
-    * shuffle blocks: the 8-vs-32-core scaling data showed exactly those
-    * queries running FASTER on fewer cores. ~64 KB of these text/orders
-    * tables is a few hundred rows — 100+ ms of tokenize-class CPU per
-    * task, amortizing the per-block exchange and scheduling cost.
-    * Session conf, not a local constant.
-    */
-  val SpreadTargetBytesKey = "spark.graft.spread.targetPartitionBytes"
-  val SpreadTargetBytesDefault: Long = 64L * 1024
-
   def spreadScan(df: DataFrame): DataFrame = {
-    val sess = df.sparkSession
-    val p = sess.sparkContext.defaultParallelism
+    val p = df.sparkSession.sparkContext.defaultParallelism
     estimatedScanSize(df) match {
       case Some((parts, bytes)) if parts < p =>
-        val target = sess.conf.get(SpreadTargetBytesKey,
-          SpreadTargetBytesDefault.toString).toLong
-        val want = math.min(p.toLong,
-          math.max(1L, (bytes + target - 1) / target)).toInt
+        val want = math.min(p.toLong, math.max(1L,
+          (bytes + SpreadTargetBytes - 1) / SpreadTargetBytes)).toInt
         if (want > parts) df.repartition(want) else df
       case Some(_) => df
       case None =>

@@ -220,7 +220,7 @@ case class EuclideanDistance(left: Expression, right: Expression)
   * columns puts tables × planes inlined dot loops into one generated
   * method; at 8×6 the method blows past the JIT/codegen method limits and
   * the whole projection drops to interpreted eval — measured 58 s for the
-  * LSH candidate join on 100k vectors vs ~1 s fused (AnnProbe). Here the
+  * LSH candidate join on 100k vectors vs ~1 s fused (BASELINE.md). Here the
   * loop is plain JIT-compiled Scala over a primitive matrix
   * (CodegenFallback costs one boxed call per row, irrelevant next to the
   * tables×planes×dim arithmetic it hosts).

@@ -1,5 +1,6 @@
 package graft.sources
 
+import java.net.{URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Options, Path}
@@ -15,7 +16,8 @@ import org.apache.hadoop.fs.{ChecksumFileSystem, FileContext, FileSystem, Option
   * dot-prefixed tmp sibling no glob or listing matches, and ONE rename
   * publishes the finished file. Two flavors:
   *   - [[atomicOverwrite]] — replace-or-create (schema, stamps,
-  *     watermarks, constraints): a reader sees the old content or the
+  *     watermarks, and the table's side files of rows through
+  *     [[writeRows]]/[[readRows]]): a reader sees the old content or the
   *     new, never neither;
   *   - [[renamePublish]] — first-writer-wins (commit records): the
   *     publish REFUSES an existing destination, preserving the
@@ -359,6 +361,38 @@ object LakeIo {
       Thread.sleep(25L * attempt)
     }
     None // unreachable
+  }
+
+  /** Read a side file of rows published by [[writeRows]]: one row per
+    * non-empty line, fields tab-separated and URL-encoded, so a field
+    * may hold any text (tabs and newlines included) and an empty
+    * trailing field survives. Read through [[resilientRead]]; an absent
+    * file has no rows. `row` maps one row's decoded fields to the
+    * caller's shape. A line it rejects, or whose fields fail to decode
+    * or convert (any IllegalArgumentException), raises an
+    * IllegalStateException naming `what` and the file.
+    */
+  def readRows[T](fs: FileSystem, path: Path, what: String, remedy: String = "")(
+      row: PartialFunction[Seq[String], T]): Seq[T] =
+    resilientRead(fs, path).fold(Seq.empty[T]) { text =>
+      text.linesIterator.filter(_.nonEmpty).map { line =>
+        def unreadable = new IllegalStateException(
+          s"unreadable $what file at $path (line: ${line.take(80)})" +
+            (if (remedy.isEmpty) "" else s" — $remedy"))
+        try row.applyOrElse(
+          line.split("\t", -1).toSeq.map(URLDecoder.decode(_, StandardCharsets.UTF_8)),
+          (_: Seq[String]) => throw unreadable)
+        catch { case _: IllegalArgumentException => throw unreadable }
+      }.toList
+    }
+
+  /** Publish `rows` at `path` in [[readRows]]'s format through
+    * [[atomicOverwrite]], creating the parent directory if it is missing.
+    */
+  def writeRows(fs: FileSystem, path: Path, rows: Seq[Seq[String]]): Unit = {
+    if (!fs.exists(path.getParent)) fs.mkdirs(path.getParent)
+    atomicOverwrite(fs, path, rows.map(
+      _.map(URLEncoder.encode(_, StandardCharsets.UTF_8)).mkString("\t")).mkString("\n"))
   }
 
   /** Publish `text` at `path` iff nothing is there — the atomic claim

@@ -2725,37 +2725,18 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * open is noise next to the write it gates. Lines without a tab are
     * rejected loudly instead of pattern-match-crashing.
     */
-  def constraints: Map[String, String] = {
-    val f = fs
-    if (!f.exists(constraintsFile)) Map.empty
-    else {
-      val in = f.open(constraintsFile)
-      val text =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-        finally in.close()
-      text.linesIterator.filter(_.nonEmpty).map { line =>
-        line.split("\t", 2) match {
-          case Array(k, v) =>
-            java.net.URLDecoder.decode(k, "UTF-8") ->
-              java.net.URLDecoder.decode(v, "UTF-8")
-          case _ =>
-            throw new IllegalStateException(
-              s"unreadable constraints file at $constraintsFile " +
-                s"(line: ${line.take(80)}) — re-add constraints via addConstraint")
-        }
-      }.toMap
-    }
-  }
+  def constraints: Map[String, String] =
+    readPairs(constraintsFile, "constraints", "re-add constraints via addConstraint")
 
-  private def saveConstraints(cons: Map[String, String]): Unit = {
-    val f = fs
-    if (!f.exists(logDir)) f.mkdirs(logDir)
-    val text = cons.toSeq.sortBy(_._1).map { case (k, v) =>
-      java.net.URLEncoder.encode(k, "UTF-8") + "\t" +
-        java.net.URLEncoder.encode(v, "UTF-8")
-    }.mkString("\n")
-    LakeIo.atomicOverwrite(f, constraintsFile, text)
-  }
+  private[sources] def saveConstraints(cons: Map[String, String]): Unit =
+    savePairs(constraintsFile, cons)
+
+  /** A side file of `name\tvalue` rows ([[LakeIo.readRows]]). */
+  private def readPairs(file: Path, what: String, remedy: String = ""): Map[String, String] =
+    LakeIo.readRows(fs, file, what, remedy) { case Seq(k, v) => k -> v }.toMap
+
+  private def savePairs(file: Path, pairs: Map[String, String]): Unit =
+    LakeIo.writeRows(fs, file, pairs.toSeq.sortBy(_._1).map { case (k, v) => Seq(k, v) })
 
   /** Table properties (`SET TBLPROPERTIES` analogue): free-form
     * name -> value pairs stored constraints-style (URL-encoded
@@ -2764,27 +2745,8 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * changes. Behavior-bearing properties so far:
     * [[LakeTable.SymlinkAutoProperty]].
     */
-  def tableProperties: Map[String, String] = {
-    val f = fs
-    if (!f.exists(propertiesFile)) Map.empty
-    else {
-      val in = f.open(propertiesFile)
-      val text =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-        finally in.close()
-      text.linesIterator.filter(_.nonEmpty).map { line =>
-        line.split("\t", 2) match {
-          case Array(k, v) =>
-            java.net.URLDecoder.decode(k, "UTF-8") ->
-              java.net.URLDecoder.decode(v, "UTF-8")
-          case _ =>
-            throw new IllegalStateException(
-              s"unreadable properties file at $propertiesFile " +
-                s"(line: ${line.take(80)}) — re-set properties via setTableProperty")
-        }
-      }.toMap
-    }
-  }
+  def tableProperties: Map[String, String] =
+    readPairs(propertiesFile, "properties", "re-set properties via setTableProperty")
 
   /** Set (or overwrite) a table property. Enabling
     * [[LakeTable.SymlinkAutoProperty]] validates the table is
@@ -2834,19 +2796,12 @@ final class LakeTable(spark: SparkSession, val path: String) {
 
   private val propertiesFile = new Path(logDir, LakeTable.PropertiesFileName)
 
-  private def saveProperties(props: Map[String, String]): Unit = {
-    val f = fs
-    if (!f.exists(logDir)) f.mkdirs(logDir)
-    val text = props.toSeq.sortBy(_._1).map { case (k, v) =>
-      java.net.URLEncoder.encode(k, "UTF-8") + "\t" +
-        java.net.URLEncoder.encode(v, "UTF-8")
-    }.mkString("\n")
-    // atomic publication (LakeIo): commit() reads this file on EVERY
-    // commit (symlinkAutoEnabled), so a torn write would brick the whole
-    // write path, not just the property feature — a concurrent reader
-    // sees the old properties or the new ones, never none
-    LakeIo.atomicOverwrite(f, propertiesFile, text)
-  }
+  // atomic publication (LakeIo): commit() reads this file on EVERY
+  // commit (symlinkAutoEnabled), so a torn write would brick the whole
+  // write path, not just the property feature — a concurrent reader
+  // sees the old properties or the new ones, never none
+  private[sources] def saveProperties(props: Map[String, String]): Unit =
+    savePairs(propertiesFile, props)
 
   /** Gate an incoming batch on the table's constraints. The batch is
     * materialized first: checking the raw plan would run the caller's
@@ -2996,38 +2951,14 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * and RECOMPUTE every generated column after applying their clauses,
     * so dependency changes propagate (Delta recomputes the same way).
     */
-  def generatedColumns: Map[String, String] = {
-    val f = fs
-    if (!f.exists(generatedFile)) Map.empty
-    else {
-      val in = f.open(generatedFile)
-      val text =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-        finally in.close()
-      text.linesIterator.filter(_.nonEmpty).map { line =>
-        line.split("\t", 2) match {
-          case Array(k, v) =>
-            java.net.URLDecoder.decode(k, "UTF-8") ->
-              java.net.URLDecoder.decode(v, "UTF-8")
-          case _ => throw new IllegalStateException(
-            s"unreadable generated-columns file at $generatedFile")
-        }
-      }.toMap
-    }
-  }
+  def generatedColumns: Map[String, String] =
+    readPairs(generatedFile, "generated-columns")
 
-  private def saveGenerated(gens: Map[String, String]): Unit =
+  private[sources] def saveGenerated(gens: Map[String, String]): Unit =
     saveGeneratedAt(logDir, gens)
 
-  private def saveGeneratedAt(dir: Path, gens: Map[String, String]): Unit = {
-    val f = fs
-    if (!f.exists(dir)) f.mkdirs(dir)
-    val text = gens.toSeq.sortBy(_._1).map { case (k, v) =>
-      java.net.URLEncoder.encode(k, "UTF-8") + "\t" +
-        java.net.URLEncoder.encode(v, "UTF-8")
-    }.mkString("\n")
-    LakeIo.atomicOverwrite(f, new Path(dir, LakeTable.GeneratedFileName), text)
-  }
+  private def saveGeneratedAt(dir: Path, gens: Map[String, String]): Unit =
+    savePairs(new Path(dir, LakeTable.GeneratedFileName), gens)
 
   /** Declare `name` as GENERATED ALWAYS AS (`exprSql`) of type
     * `dataType`. Unlike Delta (create-time only), an existing table may
@@ -3158,36 +3089,17 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * MERGE/upsert assign them to inserted rows and preserve them on
     * matched rows, UPDATE rejects SET on them.
     */
-  def identityColumns: Map[String, (Long, Long)] = {
-    val f = fs
-    if (!f.exists(identityFile)) Map.empty
-    else {
-      val in = f.open(identityFile)
-      val text =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-        finally in.close()
-      text.linesIterator.filter(_.nonEmpty).map { line =>
-        line.split("\t", 3) match {
-          case Array(k, s, st) =>
-            java.net.URLDecoder.decode(k, "UTF-8") -> (s.toLong, st.toLong)
-          case _ => throw new IllegalStateException(
-            s"unreadable identity-columns file at $identityFile")
-        }
-      }.toMap
-    }
-  }
+  def identityColumns: Map[String, (Long, Long)] =
+    LakeIo.readRows(fs, identityFile, "identity-columns") {
+      case Seq(k, s, st) => k -> (s.toLong, st.toLong)
+    }.toMap
 
-  private def saveIdentity(specs: Map[String, (Long, Long)]): Unit =
+  private[sources] def saveIdentity(specs: Map[String, (Long, Long)]): Unit =
     saveIdentityAt(logDir, specs)
 
-  private def saveIdentityAt(dir: Path, specs: Map[String, (Long, Long)]): Unit = {
-    val f = fs
-    if (!f.exists(dir)) f.mkdirs(dir)
-    val text = specs.toSeq.sortBy(_._1).map { case (k, (s, st)) =>
-      java.net.URLEncoder.encode(k, "UTF-8") + "\t" + s + "\t" + st
-    }.mkString("\n")
-    LakeIo.atomicOverwrite(f, new Path(dir, LakeTable.IdentityFileName), text)
-  }
+  private def saveIdentityAt(dir: Path, specs: Map[String, (Long, Long)]): Unit =
+    LakeIo.writeRows(fs, new Path(dir, LakeTable.IdentityFileName),
+      specs.toSeq.sortBy(_._1).map { case (k, (s, st)) => Seq(k, s.toString, st.toString) })
 
   /** Identity context for ONE operation (same single-metadata-read
     * discipline as [[GenCols]]).
@@ -3390,40 +3302,19 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * same hazard with column ids).
     */
   def columnMapping: (Map[String, String], Set[String]) = {
-    val f = fs
-    if (!f.exists(colMapFile)) (Map.empty, Set.empty)
-    else {
-      val in = f.open(colMapFile)
-      val text =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-        finally in.close()
-      val m = Map.newBuilder[String, String]
-      val r = Set.newBuilder[String]
-      text.linesIterator.filter(_.nonEmpty).foreach { line =>
-        line.split("\t", 3) match {
-          case Array("m", l, p) =>
-            m += java.net.URLDecoder.decode(l, "UTF-8") ->
-              java.net.URLDecoder.decode(p, "UTF-8")
-          case Array("r", p) => r += java.net.URLDecoder.decode(p, "UTF-8")
-          case _ => throw new IllegalStateException(
-            s"unreadable column-mapping file at $colMapFile")
-        }
-      }
-      (m.result(), r.result())
-    }
+    val (mapped, retired) = LakeIo.readRows(fs, colMapFile, "column-mapping") {
+      case Seq("m", l, p) => Left(l -> p)
+      case Seq("r", p)    => Right(p)
+    }.partitionMap(identity)
+    (mapped.toMap, retired.toSet)
   }
 
-  private def saveColMap(mapping: Map[String, String], retired: Set[String]): Unit = {
-    val f = fs
-    if (!f.exists(logDir)) f.mkdirs(logDir)
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+  private[sources] def saveColMap(mapping: Map[String, String], retired: Set[String]): Unit =
     // trivial (logical == physical) entries carry no information
-    val lines =
+    LakeIo.writeRows(fs, colMapFile,
       mapping.filter { case (l, p) => l != p }.toSeq.sortBy(_._1)
-        .map { case (l, p) => s"m\t${enc(l)}\t${enc(p)}" } ++
-        retired.toSeq.sorted.map(p => s"r\t${enc(p)}")
-    LakeIo.atomicOverwrite(f, colMapFile, lines.mkString("\n"))
-  }
+        .map { case (l, p) => Seq("m", l, p) } ++
+        retired.toSeq.sorted.map(p => Seq("r", p)))
 
   /** Physical (on-disk) twin of a logical schema. */
   private def physicalSchema(s: StructType, mapping: Map[String, String]): StructType =
@@ -3810,17 +3701,9 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * [[CommitLog.history]]'s `*.json` glob and `currentCount`'s filter
     * never mistake it for a commit record.
     */
-  private[sources] def storedSchema: Option[StructType] = {
-    val f = fs
-    if (!f.exists(schemaFile)) None
-    else {
-      val in = f.open(schemaFile)
-      val json =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-        finally in.close()
-      Some(DataType.fromJson(json).asInstanceOf[StructType])
-    }
-  }
+  private[sources] def storedSchema: Option[StructType] =
+    LakeIo.resilientRead(fs, schemaFile)
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
 
   /** Persist the authoritative schema. MONOTONE by default: for every
     * field the new schema shares with the stored one, the WIDER numeric
@@ -3851,16 +3734,8 @@ final class LakeTable(spark: SparkSession, val path: String) {
     // skipping also keeps concurrent disjoint-partition writers (who
     // share one schema) from racing each other's identical overwrite
     val unchanged =
-      try {
-        f.exists(schemaFile) && {
-          val in = f.open(schemaFile)
-          val cur =
-            try new String(
-              org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
-            finally in.close()
-          cur == json
-        }
-      } catch { case scala.util.control.NonFatal(_) => false }
+      try LakeIo.resilientRead(f, schemaFile).contains(json)
+      catch { case scala.util.control.NonFatal(_) => false }
     if (unchanged) return
     // atomic (LakeIo): EVERY reader loads this file — a torn window
     // here would fail (or mis-schema) any read racing a commit
@@ -4159,8 +4034,9 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * children just paid O(data) to WRITE them, so the metadata-op count
     * is noise at any size (10k children ≈ seconds of namenode RPCs vs
     * hours of data write); the common selective-rewrite path touches
-    * few files by construction (CommitCostProbe puts the local-fs cost
-    * at ~10% of a compact, zero spread-aware bench flags).
+    * few files by construction (the local-fs cost measured ~10% of a
+    * compact, zero spread-aware bench flags: the reliability-layer cost
+    * section of BASELINE.md).
     */
   private def completeSwap(staged: Path): (Option[(String, Map[String, String])], Int) =
     // TWIN-ATTEMPT serialization: vacuumDebris completes the main staged

@@ -58,8 +58,8 @@ final class MaterializedJoin(
     fact.read.join(dim.read, Seq(joinKey))
 
   /** Materialize the view. `clusterBy` picks which refresh stays
-    * file-local — the central LAYOUT CHOICE for this view (MvJoinProbe
-    * measures both):
+    * file-local — the central LAYOUT CHOICE for this view (both are
+    * measured in BASELINE.md's incremental join view table):
     *   - `factKey` (the usual default): fact-delta merges prune to the
     *     files holding the touched pks; a dim delta's cascade scatters
     *     across the pk-clustering and rewrites most files;

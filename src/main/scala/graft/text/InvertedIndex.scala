@@ -138,6 +138,23 @@ object InvertedIndex {
     appendPostings(spark, tokenPostings(docs, idCol, textCol), dir)
   }
 
+  /** Max removed-doc count for which [[applyChanges]] takes the
+    * TOMBSTONE path (deletion vectors keyed on a driver-side doc-id
+    * IN-list) instead of a keyed merge. The tombstone path is the
+    * Lucene/segment model on the lake's own merge-on-read machinery and
+    * is what keeps maintenance O(delta): the removal set is exactly
+    * "every posting of a superseded doc", and a superseded doc's TERMS
+    * are scattered over the vocabulary, so a (term, doc_id)-keyed merge's
+    * range pruning degrades to a full postings rewrite for any realistic
+    * text delta (apply ≈ rebuild before this path existed: the round-12
+    * index-maintenance figures in BASELINE.md). A DV write costs one
+    * postings scan plus a KB-scale vector file — no data rewritten; the
+    * next OPTIMIZE on the maintenance cadence materializes the
+    * tombstones. Above the threshold (a backfill-scale delta, not a CDC batch) the keyed merge
+    * remains — a rewrite of most files is then honest work.
+    */
+  private[text] val DvRemovalThreshold = 65536
+
   /** Fold the base table's change feed since the stamped version into the
     * index, then advance the stamp. Deletes and the pre-images of updates
     * leave via a (term, doc_id)-keyed merge — the feed carries the OLD
@@ -148,32 +165,6 @@ object InvertedIndex {
     * cannot be folded in, and silently skipping it would re-stamp a wrong
     * index as fresh, so that case throws instead.
     */
-  /** Max removed-doc count for which [[applyChanges]] takes the
-    * TOMBSTONE path (deletion vectors keyed on a driver-side doc-id
-    * IN-list) instead of a keyed merge. The tombstone path is the
-    * Lucene/segment model on the lake's own merge-on-read machinery and
-    * is what keeps maintenance O(delta): the removal set is exactly
-    * "every posting of a superseded doc", and a superseded doc's TERMS
-    * are scattered over the vocabulary, so a (term, doc_id)-keyed merge's
-    * range pruning degrades to a full postings rewrite for any realistic
-    * text delta (measured by IndexMaintenanceProbe: apply ≈ rebuild
-    * before this path existed). A DV write costs one postings scan plus
-    * a KB-scale vector file — no data rewritten; the next OPTIMIZE on
-    * the maintenance cadence materializes the tombstones. Above the
-    * threshold (a backfill-scale delta, not a CDC batch) the keyed merge
-    * remains — a rewrite of most files is then honest work.
-    *
-    * Tunable per session via `spark.graft.index.dvRemovalThreshold` —
-    * a conf read at each apply, not a JVM-global: concurrent
-    * maintenance streams on different sessions never race a shared
-    * mutable, and tests tune it through the ordinary conf surface.
-    */
-  val DvRemovalThresholdKey = "spark.graft.index.dvRemovalThreshold"
-  val DvRemovalThresholdDefault = 65536
-
-  private[text] def dvRemovalThreshold(spark: SparkSession): Int =
-    spark.conf.get(DvRemovalThresholdKey, DvRemovalThresholdDefault.toString).toInt
-
   def applyChanges(base: LakeTable, idCol: String, textCol: String, dir: String): Unit = {
     val spark = base.read.sparkSession
     val meta = IndexMeta.forMaintenance(spark, dir, base, "BM25 index")
@@ -207,10 +198,9 @@ object InvertedIndex {
     // superseded images out — tombstones for CDC-sized deltas, keyed
     // merge beyond the threshold (see DvRemovalThreshold)
     if (!postingsDone && !remPost.isEmpty) {
-      val dvMax = dvRemovalThreshold(spark)
       val remIds = remPost.select(col("doc_id")).distinct()
-        .limit(dvMax + 1).collect().map(_.get(0))
-      if (remIds.length <= dvMax)
+        .limit(DvRemovalThreshold + 1).collect().map(_.get(0))
+      if (remIds.length <= DvRemovalThreshold)
         p.deleteVectored(col("doc_id").isin(remIds: _*)): Unit
       else
         p.merge(remPost.select(col("term"), col("doc_id")), Seq("term", "doc_id"),
@@ -310,7 +300,7 @@ object InvertedIndex {
       // A removal merge whose term set touched EVERY postings file took
       // the full-rewrite path, which drops the stats dir with the old
       // table dir — re-seed instead of refreshing into a void (caught
-      // live by IndexMaintenanceProbe at 100k docs)
+      // at 100k docs by the round-12 index-maintenance run, BASELINE.md)
       if (p.hasStats) p.refreshStats() else p.collectStats(Seq("term"))
     }
     // removal-only delta with a full-rewrite merge: nothing appended,

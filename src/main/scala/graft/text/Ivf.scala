@@ -16,7 +16,7 @@ import graft.sources.LakeTable
   * cheap, write-once part). Query: score only vectors in the `nProbe`
   * cells whose centroids are closest to the query — cost drops from
   * |corpus| to ~|corpus| * nProbe / nCells per query, at recall measured
-  * in SimilaritySpec and AnnProbe.
+  * in SimilaritySpec and at 100k vectors in BASELINE.md (ANN scale probe).
   *
   * Scale design:
   *   - the k-means fit accepts `sampleFraction`: each fit iteration scans

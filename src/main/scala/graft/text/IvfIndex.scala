@@ -128,11 +128,10 @@ object IvfIndex {
     // alone is vec_id-keyed and idempotent to re-run)
     val postingsDone =
       p.exists && p.maxCommitParamLong(InvertedIndex.FoldKey) >= target
-    val dvMax = InvertedIndex.dvRemovalThreshold(spark)
     val remIds = removals.select(col("doc_id")).distinct()
-      .limit(dvMax + 1).collect().map(_.get(0))
+      .limit(InvertedIndex.DvRemovalThreshold + 1).collect().map(_.get(0))
     if (!postingsDone && remIds.nonEmpty) {
-      if (remIds.length <= dvMax)
+      if (remIds.length <= InvertedIndex.DvRemovalThreshold)
         p.deleteVectored(col("vec_id").isin(remIds: _*)): Unit
       else {
         val centers = LakeTable(spark, sub(dir, "centers")).read

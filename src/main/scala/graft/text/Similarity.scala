@@ -70,7 +70,7 @@ object Similarity {
     // ONE fused expression computes every table's bucket hash (see
     // [[graft.functions.HyperplaneBuckets]] — the composed per-plane
     // column version fell out of codegen at 8x6 planes and ran ~50x
-    // slower, measured by AnnProbe)
+    // slower; the ANN scale figures are in BASELINE.md)
     val planeSeq: Seq[Seq[Seq[Double]]] = tables.map(_.map(_.toSeq).toSeq)
     def buckets(d: DataFrame, id: String, vec: String) =
       d.select(col(id), col(vec),
@@ -83,7 +83,7 @@ object Similarity {
     // shuffles only the narrow (q_id, n_id, cos) tuple. Deduping first —
     // distinct over rows still carrying both vectors — shuffles ~600
     // bytes/row of vector payload and was the measured bottleneck of the
-    // whole LSH path (AnnProbe, 100k vectors: 76s -> see BASELINE.md).
+    // whole LSH path (100k vectors: 76s -> see the ANN tables in BASELINE.md).
     val scored = cb.join(broadcast(qb), Seq("t", "h"))
       .where(col("q_id") =!= col("n_id"))
       .select(

@@ -178,8 +178,9 @@ object TextQueries {
     * cells prune, ADC over PQ codes scores only probed cells, exact
     * cosine re-ranks the shortlist. Approximate candidate generation, so
     * rows-only; the recall bound vs pure IVF and the standing-index
-    * equivalence are pinned in SimilaritySpec, and AnnProbe measures the
-    * latency-below-both-parents claim at 100k vectors (BASELINE.md).
+    * equivalence are pinned in SimilaritySpec; the latency-below-both-
+    * parents figure at 100k vectors is the round-7 IVF-PQ table in
+    * BASELINE.md.
     */
   def ivfPqTopK(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables(spark, sfDir).embeddings

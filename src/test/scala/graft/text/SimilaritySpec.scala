@@ -58,7 +58,7 @@ class SimilaritySpec extends SparkSpec {
     // the quantizer only partitions the space — a sample-fit quantizer
     // costs at most a sliver of recall vs fitting on the whole corpus.
     // (The tolerance is loose because sf0.01 is a tiny corpus; the tight
-    // ±0.01 claim is measured by AnnProbe at 100k+ vectors.)
+    // ±0.01 claim was measured at 100k+ vectors, see BASELINE.md.)
     assert(sampledRecall >= fullRecall - 0.1,
       s"sampled-build recall $sampledRecall vs full $fullRecall")
     assert(sampledRecall >= 0.5, s"sampled recall $sampledRecall too low")
