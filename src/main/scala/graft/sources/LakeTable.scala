@@ -112,63 +112,85 @@ final class LakeTable(spark: SparkSession, val path: String) {
 
   /** Write (overwrite or append) and record a commit.
     *
-    * Parquet Overwrite deletes the whole table dir — including the commit
-    * log — so the (tiny) log is held in memory across the write and
-    * restored after, preserving history like Delta does.
+    * Append lands through a private stage ([[appendViaStage]]). Every
+    * other mode replaces the table through the full staged rewrite
+    * ([[rewrite]]): the batch is written and validated beside the table,
+    * then swapped in with the commit log, side files and change feed
+    * carried through — the live table directory is never deleted in
+    * place, so a crash leaves the old table or a marked stage that
+    * [[vacuumDebris]] completes, and history survives like Delta's. A
+    * commit landing while the overwrite is in flight refuses it (Delta's
+    * ConcurrentModificationException contract); so does another staged
+    * rewrite holding the stage claim.
     */
   def write(
       df: DataFrame,
       mode: SaveMode = SaveMode.Overwrite,
       mergeSchema: Boolean = false,
       overwriteSchema: Boolean = false,
-      extraParams: Map[String, String] = Map.empty): LakeTable = {
+      extraParams: Map[String, String] = Map.empty): LakeTable =
+    writeBody(df, None, mode, mergeSchema, overwriteSchema, extraParams)
+
+  /** The one body of [[write]] and [[writePartitioned]] (`partitionBy`
+    * is `None` for the plain write, which labels history by mode).
+    */
+  private def writeBody(
+      df: DataFrame,
+      partitionBy: Option[Seq[String]],
+      mode: SaveMode,
+      mergeSchema: Boolean,
+      overwriteSchema: Boolean,
+      extraParams: Map[String, String]): LakeTable = {
     // Ignore on an existing table is a no-op for the data files, so it
     // must be a no-op for the log too — replacing the authoritative
     // schema while leaving the old files behind would corrupt reads
     if (mode == SaveMode.Ignore && fs.exists(new Path(path))) return this
+    if (mode == SaveMode.ErrorIfExists && fs.exists(new Path(path)))
+      throw new org.apache.spark.sql.AnalysisException("PATH_ALREADY_EXISTS",
+        Map("outputPath" -> fs.makeQualified(new Path(path)).toString))
+    val partitionCols = partitionBy.getOrElse(Seq.empty)
+    require(partitionCols.isEmpty || mode == SaveMode.Overwrite || !isShallowClone,
+      s"partitioned append to a flat-layout shallow clone would mix layouts — " +
+        "materialize() first (a full Overwrite replaces the clone and is fine)")
     // substrate honesty BEFORE the data job: an object-store path with
     // no opted-in commit mode must refuse here, not after the parquet
     // write burned a cluster-scale job (LakeIo raises the same refusal
     // at the first metadata publication either way)
     LakeIo.requireCommitCapable(fs, new Path(path), "lake write")
+    val append = mode == SaveMode.Append
+    // a replacing write's OCC base, taken before its schema read: any
+    // commit (data or DDL) landing from here on refuses the swap
+    val occBase = if (append) None else Some(CommitLog.nextVersion(fs, logDir))
     val ic = idCols
-    requireNoIdentityProvided(df, "write", ic)
+    requireNoIdentityProvided(df,
+      if (partitionBy.isDefined) "writePartitioned" else "write", ic)
     val beforeNames = storedSchema.map(_.fieldNames.toSet).getOrElse(Set.empty)
     val (withGen, genChecks) = applyGenerated(withNullIdentity(df, ic))
     val (aligned, schema) =
-      enforceSchema(withGen, appendLike = mode == SaveMode.Append, mergeSchema, overwriteSchema)
+      enforceSchema(withGen, appendLike = append, mergeSchema, overwriteSchema)
     // evolution-added columns must not rebind a retired/renamed physical
     mapNewColumns(schema.fieldNames.filterNot(beforeNames).toSeq)
     val (assigned, idParams) = applyIdentityIngest(aligned, ic)
-    val (toWrite, consSeen) = constrainedBatch(assigned, genChecks)
-    val baseParams = Map("mode" -> mode.toString) ++ extraParams ++ idParams
-    if (mode == SaveMode.Append) {
+    val op = if (partitionBy.isDefined) "WRITE PARTITIONED" else writeOp(mode)
+    val params = Map("mode" -> mode.toString) ++
+      partitionBy.map(cols => "partitionBy" -> cols.mkString(",")) ++
+      extraParams ++ idParams
+    if (append) {
       // late-constraint re-validation runs INSIDE appendViaStage, at the
       // mark — not here, where the staging job would re-open the window
-      val (staged, params, poisoned) = appendViaStage(
-        toPhysical(toWrite), Seq.empty, writeOp(mode), baseParams, schema,
-        consSeen)
+      val (toWrite, consSeen) = constrainedBatch(assigned, genChecks)
+      val (staged, tagged, poisoned) = appendViaStage(toPhysical(toWrite),
+        partitionCols.map(physicalOf), op, params, schema, consSeen)
       saveSchema(schema)
-      commitStagedAppend(staged, writeOp(mode), params)
-      raisePoisoned(writeOp(mode), poisoned)
-    } else {
-      // the point of no return for a non-append write IS the parquet job
-      // below — gate as late as possible
-      val seenLate = lateConstraintCheck(toWrite, consSeen)
-      onOverwriteGatedForTest()
-      preservingLog(mode) {
-        toPhysical(toWrite).write.mode(mode).parquet(path)
-      }
-      // post-job detection: a DDL published AND audited entirely inside
-      // the job's duration saw no log movement and no marked stage (an
-      // overwrite stages nothing), so the writer is the only side that
-      // can still see it — the written table IS this batch, re-read it
-      val poisoned = postMarkConstraintCheck(new Path(path), seenLate)
-      saveSchema(schema, replace = overwriteSchema)
-      commit(writeOp(mode), baseParams)
-      raisePoisoned(writeOp(mode), poisoned)
-    }
-    this
+      commitStagedAppend(staged, op, tagged)
+      raisePoisoned(op, poisoned)
+      this
+    } else
+      // constraints (and generated-column checks) validate the staged
+      // files, read after the staging job — nothing upstream runs twice
+      rewrite(assigned, op, params, occBase = occBase,
+        partitionCols = partitionCols.map(physicalOf),
+        replaceSchema = overwriteSchema, extraChecks = genChecks)
   }
 
   /** Land an append through a PRIVATE uuid-suffixed stage, then promote
@@ -282,14 +304,6 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * that [[commitIfAbsent]] closes it in both interleave directions).
     */
   private[graft] var onVacuumPreAttributeForTest: () => Unit = () => ()
-
-  /** Test seam: fires on the plain-OVERWRITE path after the late-
-    * constraint gate and before the parquet job — the window where a
-    * DDL can validate+publish against the OLD data with nothing (no
-    * mark, no commit) to warn either side (ConstraintRaceSpec pins the
-    * post-job detection).
-    */
-  private[graft] var onOverwriteGatedForTest: () => Unit = () => ()
 
   /** The writer-side commit of an [[appendViaStage]] append, then stage
     * teardown. An ageless recovery (a peer's cold start, [[vacuumDebris]])
@@ -471,12 +485,8 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * Long-running sinks should still track their high-water mark via
     * [[maxCommitParamLong]] instead of probing per batch.
     */
-  def hasCommitParam(key: String, value: String): Boolean = {
-    // params serialize as "k":"v" with CommitLog.esc, so matching the
-    // fully-quoted pair is exact — no substring false positives
-    val needle = s""""${CommitLog.esc(key)}":"${CommitLog.esc(value)}""""
-    CommitLog.records(fs, logDir).reverseIterator.exists(_.contains(needle))
-  }
+  def hasCommitParam(key: String, value: String): Boolean =
+    commitParamsNewestFirst(key).contains(value)
 
   /** The MAX long value any commit recorded under `key` in its
     * operationParameters, -1 if none — the Delta txnAppId/txnVersion
@@ -486,29 +496,9 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * ([[CommitLog.records]]); callers cache the result and track it in
     * memory afterwards.
     */
-  def maxCommitParamLong(key: String): Long = {
-    val prefix = s""""${CommitLog.esc(key)}":""""
-    CommitLog.records(fs, logDir).foldLeft(-1L) { (acc, text) =>
-      val i = text.indexOf(prefix)
-      if (i < 0) acc
-      else {
-        val start = i + prefix.length
-        val end = text.indexOf('"', start)
-        val v =
-          if (end < 0) -1L
-          else try text.substring(start, end).toLong
-          catch { case _: NumberFormatException => -1L }
-        math.max(acc, v)
-      }
-    }
-  }
+  def maxCommitParamLong(key: String): Long =
+    commitParamsNewestFirst(key).map(_.toLongOption.getOrElse(-1L)).foldLeft(-1L)(math.max)
 
-  /** Every value any commit recorded under `key` in its
-    * operationParameters — one checkpointed-log read. Deletion-vector
-    * gating ([[liveDvDirs]]), COPY INTO ledger claims ([[copiedFiles]])
-    * and debris cleanup ([[vacuumDebris]]) consume this to decide which
-    * side files a commit actually claimed.
-    */
   /** Highest change-set version ever removed by a [[vacuumChanges]]
     * commit, or -1 if the feed was never vacuumed — the resume floor for
     * [[readChanges]] with an explicit `fromVersion`.
@@ -519,19 +509,26 @@ final class LakeTable(spark: SparkSession, val path: String) {
     if (removed.isEmpty) -1L else removed.max
   }
 
-  private def commitParamValues(key: String): Set[String] = {
-    val prefix = s""""${CommitLog.esc(key)}":""""
-    val out = Set.newBuilder[String]
-    CommitLog.records(fs, logDir).foreach { text =>
-      var i = text.indexOf(prefix)
-      while (i >= 0) {
-        val start = i + prefix.length // prefix ends at the value's opening quote
-        val end = text.indexOf('"', start)
-        if (end > start) out += text.substring(start, end)
-        i = text.indexOf(prefix, start)
-      }
-    }
-    out.result()
+  /** Every value any commit recorded under `key` in its
+    * operationParameters — one checkpointed-log read. Deletion-vector
+    * gating ([[liveDvDirs]]), COPY INTO ledger claims ([[copiedFiles]])
+    * and debris cleanup ([[vacuumDebris]]) consume this to decide which
+    * side files a commit actually claimed.
+    */
+  private def commitParamValues(key: String): Set[String] =
+    commitParamsNewestFirst(key).toSet
+
+  /** The values commits recorded under `key`, newest commit first, as
+    * [[CommitLog.parseRecord]] reads them — the one reader behind
+    * [[hasCommitParam]], [[maxCommitParamLong]] and [[commitParamValues]].
+    * Only records whose text holds the quoted key are parsed: every read
+    * of a table with deletion vectors runs this ([[liveDvDirs]]).
+    */
+  private def commitParamsNewestFirst(key: String): Iterator[String] = {
+    val quotedKey = s""""${CommitLog.esc(key)}":"""
+    CommitLog.records(fs, logDir).reverseIterator
+      .filter(_.contains(quotedKey))
+      .flatMap(r => CommitLog.parseRecord(r).params.get(key))
   }
 
   private def readLogFile(p: Path): String = {
@@ -562,45 +559,8 @@ final class LakeTable(spark: SparkSession, val path: String) {
       partitionCols: Seq[String],
       mode: SaveMode = SaveMode.Overwrite,
       mergeSchema: Boolean = false,
-      overwriteSchema: Boolean = false): LakeTable = {
-    // same no-op contract as write(): Ignore must not touch log or schema
-    if (mode == SaveMode.Ignore && fs.exists(new Path(path))) return this
-    require(mode == SaveMode.Overwrite || !isShallowClone,
-      s"partitioned append to a flat-layout shallow clone would mix layouts — " +
-        "materialize() first (a full Overwrite replaces the clone and is fine)")
-    val ic = idCols
-    requireNoIdentityProvided(df, "writePartitioned", ic)
-    val beforeNames = storedSchema.map(_.fieldNames.toSet).getOrElse(Set.empty)
-    val (withGen, genChecks) = applyGenerated(withNullIdentity(df, ic))
-    val (aligned, schema) =
-      enforceSchema(withGen, appendLike = mode == SaveMode.Append, mergeSchema, overwriteSchema)
-    mapNewColumns(schema.fieldNames.filterNot(beforeNames).toSeq)
-    val (assigned, idParams) = applyIdentityIngest(aligned, ic)
-    val (toWrite, consSeen) = constrainedBatch(assigned, genChecks)
-    val baseParams = Map("mode" -> mode.toString,
-      "partitionBy" -> partitionCols.mkString(",")) ++ idParams
-    if (mode == SaveMode.Append) {
-      // late-constraint gate at the mark, inside appendViaStage
-      val (staged, params, poisoned) = appendViaStage(toPhysical(toWrite),
-        partitionCols.map(physicalOf), "WRITE PARTITIONED", baseParams, schema,
-        consSeen)
-      saveSchema(schema)
-      commitStagedAppend(staged, "WRITE PARTITIONED", params)
-      raisePoisoned("WRITE PARTITIONED", poisoned)
-    } else {
-      val seenLate = lateConstraintCheck(toWrite, consSeen)
-      preservingLog(mode) {
-        toPhysical(toWrite).write.mode(mode)
-          .partitionBy(partitionCols.map(physicalOf): _*).parquet(path)
-      }
-      // post-job detection — see the plain-write overwrite branch
-      val poisoned = postMarkConstraintCheck(new Path(path), seenLate)
-      saveSchema(schema, replace = overwriteSchema)
-      commit("WRITE PARTITIONED", baseParams)
-      raisePoisoned("WRITE PARTITIONED", poisoned)
-    }
-    this
-  }
+      overwriteSchema: Boolean = false): LakeTable =
+    writeBody(df, Some(partitionCols), mode, mergeSchema, overwriteSchema, Map.empty)
 
   /** Dynamic partition overwrite: replaces ONLY the partitions present in
     * `df`, leaving sibling partitions (and the commit log) untouched —
@@ -2536,10 +2496,8 @@ final class LakeTable(spark: SparkSession, val path: String) {
     // caught by the POST-SAVE audit below: the mark is visible by then,
     // so roll the constraint back and retry over the landed rows. The
     // DDL side can always retract; a writer past its mark cannot.
-    // A plain OVERWRITE in flight marks nothing and has not committed —
-    // invisible to both channels — so its writer carries the closure:
-    // a post-job postMarkConstraintCheck over the rewritten table,
-    // raised loudly after its commit (raisePoisoned).
+    // An OVERWRITE is a staged rewrite like MERGE: its swap manifest is
+    // a marked stage, and this DDL's commit refuses its swap (OCC).
     var attempts = 0
     while (true) {
       // marked APPEND stages existing NOW hold rows `read` cannot see
@@ -2846,7 +2804,12 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * read→mark gap is microseconds. The residual (a save landing inside
     * that gap) is detected from the DDL side: [[addConstraint]]'s
     * post-save audit sees the mark, rolls the constraint back, and
-    * re-validates over the landed rows.
+    * re-validates over the landed rows. The full staged rewrite (every
+    * non-append [[write]], MERGE, maintenance fallbacks) needs no loop:
+    * it reads the constraint set after its staging job and validates the
+    * staged files, and a DDL committing after that read refuses its swap
+    * through the OCC check. [[replaceWhere]] runs this batch form before
+    * its staged rewrite re-validates.
     */
   private def lateConstraintCheck(
       batch: DataFrame, validated: Map[String, String]): Set[String] =
@@ -2888,13 +2851,15 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * the operator hears about the unvalidated admission loudly instead
     * of never. Usually moot: the DDL's own post-save audit sees the
     * mark first and retracts the constraint, in which case this read
-    * finds nothing late. Staged-SWAP paths need no analogue — their
-    * post-swap audit refuses to commit over ANY interloping commit, and
-    * ADD CONSTRAINT commits, so the crossing fails loudly there already.
+    * finds nothing late. The callers are the mark-then-promote paths
+    * (staged append, dynamic partition overwrite). Full staged-SWAP
+    * paths, overwrite included, need no analogue — their post-swap audit
+    * refuses to commit over ANY interloping commit, and ADD CONSTRAINT
+    * commits, so the crossing fails loudly there already.
     */
   private def postMarkConstraintCheck(
       staged: Path, seen: Set[String],
-      promotedFallback: Seq[Path] = Seq.empty): Option[String] = {
+      promotedFallback: Seq[Path]): Option[String] = {
     val late = constraints.filter(kv => !seen.contains(kv._1))
     if (late.isEmpty) None
     else {
@@ -3742,45 +3707,17 @@ final class LakeTable(spark: SparkSession, val path: String) {
     LakeIo.atomicOverwrite(f, schemaFile, json)
   }
 
-  /** Recover a `__changes_tmp` dir left by a crash between
-    * [[preservingLog]]'s move-aside and restore: rename it back when no
-    * live feed dir exists; otherwise fold its (older) version dirs into
-    * the live feed, keeping the live copy on collision. Safe whenever no
-    * writer is active on the table.
-    */
-  private def recoverStaleChangesTmp(): Unit = {
-    val changesDir = new Path(path, LakeTable.ChangesDirName)
-    val changesTmp = new Path(s"$path${LakeTable.ChangesTmpSuffix}")
-    if (fs.exists(changesTmp)) {
-      if (!fs.exists(changesDir)) {
-        if (!fs.rename(changesTmp, changesDir))
-          throw new java.io.IOException(
-            s"could not recover stale change feed $changesTmp to $changesDir")
-      } else {
-        fs.listStatus(changesTmp).foreach { st =>
-          val dest = new Path(changesDir, st.getPath.getName)
-          if (!fs.exists(dest) && !fs.rename(st.getPath, dest))
-            throw new java.io.IOException(
-              s"could not recover orphaned change set ${st.getPath} into $dest")
-        }
-        fs.delete(changesTmp, true)
-      }
-    }
-  }
-
-  /** Crash-debris GC (`VACUUM`-adjacent): recover any stranded
-    * change-feed tmp dir, and resolve an orphaned staged-rewrite dir —
-    * COMPLETING the swap when the stage carries a swap manifest (the
-    * rewrite had passed its point of no return: new data validated, log
-    * moved aside — deleting it would lose the commit log and, for a
-    * selective rewrite, any untouched files already pulled in), or
-    * deleting it when no manifest exists (pre-swap crash: the table was
-    * never touched and the stage is dead bytes). Run when no writer is
-    * active on the table; readers are unaffected either way because
-    * neither dir is part of the live table path.
+  /** Crash-debris GC (`VACUUM`-adjacent): resolve an orphaned
+    * staged-rewrite dir — COMPLETING the swap when the stage carries a
+    * swap manifest (the rewrite had passed its point of no return: new
+    * data validated, log moved aside — deleting it would lose the commit
+    * log and, for a selective rewrite, any untouched files already pulled
+    * in), or deleting it when no manifest exists (pre-swap crash: the
+    * table was never touched and the stage is dead bytes). Run when no
+    * writer is active on the table; readers are unaffected either way
+    * because the stage is not part of the live table path.
     */
   def vacuumDebris(): LakeTable = {
-    recoverStaleChangesTmp()
     // marked APPEND stages first, agelessly: the manifest only exists
     // once the writer passed its point of no return, completion is
     // idempotent renames + an uuid-guarded attribution, and leaving one
@@ -4415,77 +4352,6 @@ final class LakeTable(spark: SparkSession, val path: String) {
     text.split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
   }
 
-  /** Run a data write (which on Overwrite deletes the table dir, commit
-    * log included) with the tiny log buffered in memory across it and
-    * restored after — callers `commit()` AFTER this returns, so version
-    * numbering stays monotonic over the reinstated log.
-    */
-  private def preservingLog(mode: SaveMode)(dataWrite: => Unit): Unit = {
-    val saved: Seq[(String, Array[Byte])] =
-      if (mode == SaveMode.Overwrite && fs.exists(logDir)) {
-        fs.listStatus(logDir).toSeq.filter(_.isFile).map { st =>
-          val in = fs.open(st.getPath)
-          try st.getPath.getName -> org.apache.commons.io.IOUtils.toByteArray(in)
-          finally in.close()
-        }
-      } else Seq.empty
-    // the change feed can be big — move it aside (metadata rename) rather
-    // than buffering; old versions' changes survive an overwrite like
-    // Delta's CDF history does
-    val changesDir = new Path(path, LakeTable.ChangesDirName)
-    val changesTmp = new Path(s"$path${LakeTable.ChangesTmpSuffix}")
-    val movedChanges =
-      if (mode != SaveMode.Overwrite) false
-      else {
-        // a tmp dir already present means a prior run crashed between
-        // move and restore — recover its version dirs FIRST, or this
-        // rename would nest the live feed inside the stale tmp (the
-        // HDFS rename-into-existing-dir semantics) and the stale
-        // change sets would shadow every later overwrite
-        recoverStaleChangesTmp()
-        if (fs.exists(changesDir)) {
-          // a silent rename failure here would let the Overwrite below
-          // delete the entire feed with no error — fail loudly instead
-          if (!fs.rename(changesDir, changesTmp))
-            throw new java.io.IOException(
-              s"could not move change feed $changesDir aside to $changesTmp before overwrite")
-          true
-        } else false
-      }
-    // restore on BOTH paths: a FAILED overwrite has already deleted the
-    // table dir (log included) before its tasks ran, so the buffered log
-    // and the moved-aside feed must come back even on exception —
-    // otherwise history/schema/constraints are silently gone and later
-    // writes run unenforced. A restore failure during exception handling
-    // is suppressed onto the original error, never masking it.
-    def restore(): Unit = {
-      val f = fs
-      if (movedChanges) {
-        // the failed job may have deleted $path without recreating it;
-        // rename needs the parent to exist
-        if (!f.exists(new Path(path))) f.mkdirs(new Path(path))
-        if (!f.rename(changesTmp, changesDir))
-          throw new java.io.IOException(
-            s"could not restore change feed from $changesTmp to $changesDir")
-      }
-      if (saved.nonEmpty) {
-        if (!f.exists(logDir)) f.mkdirs(logDir)
-        saved.foreach { case (name, bytes) =>
-          LakeIo.atomicOverwrite(f, new Path(logDir, name),
-            new String(bytes, StandardCharsets.UTF_8))
-        }
-      }
-    }
-    try dataWrite
-    catch {
-      case e: Throwable =>
-        try restore()
-        catch { case r: Throwable => e.addSuppressed(r) }
-        throw e
-    }
-    restore()
-  }
-
   /** Compaction + multi-column clustering — the ZORDER substitute.
     *
     * @param zorderBy cluster columns, highest-selectivity first
@@ -4507,13 +4373,15 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * pure appends rebases (the appended files ride the manifest through
     * untouched, see [[occResolve]]) instead of failing. Shallow clones
     * (referenced files aren't locally listable) and Hive-partitioned
-    * layouts fall back to the strict whole-table [[rewrite]].
+    * layouts fall back to the strict whole-table [[rewrite]], which keeps
+    * the partition layout.
     */
   private def maintenanceRewrite(
       op: String, params: Map[String, String],
       transform: DataFrame => DataFrame): LakeTable = {
-    if (isShallowClone || partitionColumns().nonEmpty)
-      return rewrite(transform(read), op, params)
+    val parts = partitionColumns()
+    if (isShallowClone || parts.nonEmpty)
+      return rewrite(transform(read), op, params, partitionCols = parts)
     // base version BEFORE the listing: a commit landing between the two
     // shows up as an interloper AND its files as rebase candidates —
     // never silently dropped, never double-counted (the staged input
@@ -4715,7 +4583,19 @@ final class LakeTable(spark: SparkSession, val path: String) {
   }
 
   /** Stage the clustered rewrite to a sibling dir, then swap — avoids
-    * reading+overwriting the same location in one job.
+    * reading+overwriting the same location in one job, and never deletes
+    * the live table in place: the manifest marks the point of no return,
+    * the log rides through the stage, and [[completeSwap]] (or its crash
+    * recovery) places the new files. Carries every full replacement:
+    * MERGE, SCD2, backfills, maintenance fallbacks, and every non-append
+    * [[write]]/[[writePartitioned]].
+    *
+    * @param partitionCols physical columns the staged files are
+    *                      Hive-partitioned by (empty: flat layout)
+    * @param replaceSchema take `clustered`'s schema verbatim instead of
+    *                      merging it with the stored one (overwriteSchema)
+    * @param extraChecks   checks validated with the table's constraints
+    *                      against the staged files (generated columns)
     */
   private[sources] def rewrite(
       clustered: DataFrame, op: String, params: Map[String, String],
@@ -4723,10 +4603,13 @@ final class LakeTable(spark: SparkSession, val path: String) {
       onCommit: Long => Unit = _ => (),
       occBase: Option[Long] = None,
       plainNames: Boolean = false,
-      onStagedLog: Path => Unit = _ => ()): LakeTable = {
+      onStagedLog: Path => Unit = _ => (),
+      partitionCols: Seq[String] = Seq.empty,
+      replaceSchema: Boolean = false,
+      extraChecks: Map[String, String] = Map.empty): LakeTable = {
     claimStage(op)
     try rewriteClaimed(clustered, op, params, onAbort, onCommit, occBase,
-      plainNames, onStagedLog)
+      plainNames, onStagedLog, partitionCols, replaceSchema, extraChecks)
     finally releaseStage()
   }
 
@@ -4736,7 +4619,10 @@ final class LakeTable(spark: SparkSession, val path: String) {
       onCommit: Long => Unit,
       occBase: Option[Long],
       plainNames: Boolean,
-      onStagedLog: Path => Unit): LakeTable = {
+      onStagedLog: Path => Unit,
+      partitionCols: Seq[String],
+      replaceSchema: Boolean,
+      extraChecks: Map[String, String]): LakeTable = {
     val staged = s"$path${LakeTable.StageSuffix}"
     // optimistic concurrency (Delta's OCC contract): the version this
     // rewrite derives from — passed down by DML callers that captured
@@ -4748,14 +4634,18 @@ final class LakeTable(spark: SparkSession, val path: String) {
     // onAbort fires ONLY for pre-swap failures (table untouched); once
     // the swap has happened the caller's side effects must stand
     try {
-      (if (plainNames) clustered else toPhysical(clustered))
-        .write.mode(SaveMode.Overwrite).parquet(staged)
+      val written = if (plainNames) clustered else toPhysical(clustered)
+      val w = written.write.mode(SaveMode.Overwrite)
+      (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
+        .parquet(staged)
       // constraints validate the STAGED files (nothing recomputed); a
-      // violating merge/optimize aborts before the swap, table untouched
-      val cons = constraints
+      // violating merge/optimize aborts before the swap, table untouched.
+      // Read with the written schema: an empty output stages no parquet
+      // file to infer one from (TRUNCATE of a constrained table)
+      val cons = constraints ++ extraChecks
       if (cons.nonEmpty) {
-        val stagedView =
-          if (plainNames) spark.read.parquet(staged) else stagedLogical(staged)
+        val stagedRaw = spark.read.schema(written.schema).parquet(staged)
+        val stagedView = if (plainNames) stagedRaw else logicalView(stagedRaw)
         try enforceConstraints(stagedView, cons)
         catch { case e: Throwable => fs.delete(new Path(staged), true); throw e }
       }
@@ -4815,7 +4705,7 @@ final class LakeTable(spark: SparkSession, val path: String) {
     // schema in lockstep so stored-schema reads match the new files
     // (upsert casts to the table types, so this is a no-op for MERGE;
     // for optimize it refreshes nullability after the clustered rewrite)
-    saveSchema(clustered.schema)
+    saveSchema(clustered.schema, replace = replaceSchema)
     // exactly-once through the log (see the swapSelective site): a
     // recovery twin mid-attribution is invisible to a snapshot read, so
     // adopt-or-commit runs inside commitIfAbsent's claim loop
@@ -5453,7 +5343,6 @@ object LakeTable {
   // dynamic-partition-overwrite stages: uuid-suffixed so concurrent
   // disjoint-partition writers never share a committer _temporary dir
   val PartStageSuffix = "__staging_part_"
-  val ChangesTmpSuffix = "__changes_tmp"
   // appendExpecting's quarantine sibling: OUTSIDE the table dir so the
   // staged-swap protocol (which replaces the table dir wholesale) can
   // never erase the audit trail

@@ -196,55 +196,53 @@ class ConstraintRaceSpec extends SparkSpec {
     assert(fresh2.constraints.contains("x_pos"))
   }
 
-  test("overwrite window: a DDL validated+published entirely inside the job raises post-commit") {
-    // the plain-Overwrite analogue of the ε-window: the writer's gate
-    // runs BEFORE its (possibly long) parquet job, and an overwrite
-    // stages nothing and has not committed — a DDL that validates the
-    // OLD data and completes its audit inside the job's duration is
-    // invisible to both channels the audit watches. The writer's
-    // post-job re-read of the REWRITTEN table is the only closure.
-    val dir = fresh("ovw")
+  /** An ADD CONSTRAINT that validates the OLD data and commits while an
+    * overwrite is staged, just before the swap's OCC check (the
+    * onResolvedForTest seam). The overwrite is a staged rewrite, so the
+    * DDL's commit refuses it before its point of no return.
+    */
+  private def overwriteRacingDdl(dir: String, batch: Double): Unit = {
     val lake = LakeTable(spark, dir)
     lake.write(Seq((1L, 10.0)).toDF("id", "x").coalesce(1))
     var fired = 0
-    lake.onOverwriteGatedForTest = () => {
+    lake.onResolvedForTest = () => {
       if (fired == 0) {
         fired += 1
-        // validates the pre-job table (passes), sees no mark and no log
-        // movement (the overwrite commits later) — publishes cleanly
         LakeTable(spark, dir).addConstraint("x_pos", "x > 0"): Unit
       }
     }
     try {
-      val e = intercept[IllegalStateException] {
-        lake.write(Seq((2L, -1.0)).toDF("id", "x").coalesce(1), SaveMode.Overwrite)
+      intercept[java.util.ConcurrentModificationException] {
+        lake.write(Seq((2L, batch)).toDF("id", "x").coalesce(1), SaveMode.Overwrite)
       }
-      assert(e.getMessage.contains("COMMITTED"), e.getMessage)
-      assert(e.getMessage.contains("x_pos"), e.getMessage)
       assert(fired == 1, "interleaved DDL never ran")
-    } finally lake.onOverwriteGatedForTest = () => ()
-    // the overwrite landed and committed; the operator was told loudly
+    } finally lake.onResolvedForTest = () => ()
+    // refused cleanly: old row, constraint kept, no stage left behind
     val fresh2 = LakeTable(spark, dir)
-    assert(fresh2.read.count() === 1L)
-    assert(fresh2.read.select("x").as[Double].head() === -1.0)
-    assert(fresh2.constraints.contains("x_pos"))
+    assert(fresh2.read.as[(Long, Double)].collect().toSeq === Seq((1L, 10.0)))
+    assert(fresh2.constraints.get("x_pos").contains("x > 0"))
+    assert(!new java.io.File(s"$dir${LakeTable.StageSuffix}").exists)
+    assert(!new java.io.File(s"$dir${LakeTable.StageClaimSuffix}").exists)
   }
 
-  test("overwrite window: a CLEAN overwrite passes the post-job read silently") {
-    val dir = fresh("ovwclean")
-    val lake = LakeTable(spark, dir)
-    lake.write(Seq((1L, 10.0)).toDF("id", "x").coalesce(1))
-    var fired = 0
-    lake.onOverwriteGatedForTest = () => {
-      if (fired == 0) {
-        fired += 1
-        LakeTable(spark, dir).addConstraint("x_pos", "x > 0"): Unit
-      }
+  test("overwrite window: a DDL committing mid-overwrite refuses it, and the retry is gated") {
+    val dir = fresh("ovw")
+    overwriteRacingDdl(dir, -1.0)
+    // the retry sees the constraint and refuses the violating batch
+    val e = intercept[IllegalArgumentException] {
+      LakeTable(spark, dir).write(Seq((2L, -1.0)).toDF("id", "x").coalesce(1), SaveMode.Overwrite)
     }
-    try lake.write(Seq((2L, 5.0)).toDF("id", "x").coalesce(1), SaveMode.Overwrite)
-    finally lake.onOverwriteGatedForTest = () => ()
-    assert(fired == 1)
-    assert(LakeTable(spark, dir).read.count() === 1L)
+    assert(e.getMessage.contains("x_pos"), e.getMessage)
+    assert(LakeTable(spark, dir).read.as[(Long, Double)].collect().toSeq === Seq((1L, 10.0)))
+  }
+
+  test("overwrite window: a CLEAN overwrite refused by a mid-overwrite DDL lands on retry") {
+    val dir = fresh("ovwclean")
+    overwriteRacingDdl(dir, 5.0)
+    LakeTable(spark, dir).write(Seq((2L, 5.0)).toDF("id", "x").coalesce(1), SaveMode.Overwrite)
+    val fresh2 = LakeTable(spark, dir)
+    assert(fresh2.read.as[(Long, Double)].collect().toSeq === Seq((2L, 5.0)))
+    assert(fresh2.constraints.contains("x_pos"))
   }
 
   test("ε-window: a CLEAN batch passes the post-mark read silently") {

@@ -8,7 +8,8 @@ import graft.core.GraftSession
 
 /** Ad-hoc reproducer for CrashInjectionSpec failures — prints the
   * directory tree and read state around one fuse position.
-  * Usage: Test/runMain graft.sources.CrashDebug <scenario> <fuse>
+  * Usage: Test/runMain graft.sources.CrashDebug <scenario> <fuse>, where
+  * scenario is upsert (the default), compact or overwrite.
   */
 object CrashDebug {
   def main(args: Array[String]): Unit = {
@@ -21,10 +22,14 @@ object CrashDebug {
     val dir = Files.createTempDirectory("graft_crashdbg").toString + "/t"
     val lake = LakeTable(spark, dir)
     lake.write(Seq((0L, "a"), (1L, "a"), (2L, "a")).toDF("id", "v").coalesce(1))
-    if (scenario == "compact")
+    if (scenario == "compact" || scenario == "overwrite")
       (0 until 3).foreach { i =>
         lake.write(Seq((3L + i, "s")).toDF("id", "v").coalesce(1), SaveMode.Append): Unit
       }
+    if (scenario == "overwrite") {
+      lake.upsert(Seq((1L, "u")).toDF("id", "v"), Seq("id"), changeFeed = true): Unit
+      lake.addConstraint("id_nonneg", "id >= 0"): Unit
+    }
 
     def tree(label: String): Unit = {
       println(s"==== $label ====")
@@ -45,6 +50,8 @@ object CrashDebug {
     val err = try {
       scenario match {
         case "compact" => lake.compactSmall(1L << 30, 1L << 30): Unit
+        case "overwrite" => lake.write(Seq((20L, "o"), (21L, "o")).toDF("id", "v")
+          .coalesce(1), SaveMode.Overwrite): Unit
         case _ => lake.upsert(Seq((1L, "u"), (5L, "n")).toDF("id", "v"),
           Seq("id"), changeFeed = true): Unit
       }
@@ -60,6 +67,7 @@ object CrashDebug {
     println("rows: " + fresh.read.collect().map(_.toString).sorted.mkString(", "))
     println("history: " + fresh.history.select("version", "operation")
       .collect().map(_.toString).mkString(", "))
+    println("constraints: " + fresh.constraints)
     spark.stop()
   }
 }

@@ -84,7 +84,10 @@ final class GatedRawFs extends RawLocalFileSystem {
   *   4. retrying the op (the crashed client's documented contract)
   *      lands the post-state exactly;
   *   5. the table is not bricked: a follow-up append commits and reads
-  *      back, and no stage/claim debris survives recovery.
+  *      back, and no stage/claim debris survives recovery;
+  *   6. the table's metadata survives: every pre-crash commit record is
+  *      still in `history`, `constraints` is unchanged, and the change
+  *      feed still returns every row it had recorded.
   *
   * The gated fs is the METADATA fs (LakeTable.fsDecoratorForTest):
   * driver-side swap phases, LakeIo publications, commit claims, DV/
@@ -92,6 +95,15 @@ final class GatedRawFs extends RawLocalFileSystem {
   * files land whole, which matches any real crash at task granularity
   * (a torn task file is the committer's problem and never promoted).
   */
+object CrashInjectionSpec {
+
+  /** What a crash must never take from a table besides its rows. */
+  final case class Metadata(
+      history: Set[(Long, String)],
+      constraints: Map[String, String],
+      changes: Set[String])
+}
+
 class CrashInjectionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -130,6 +142,7 @@ class CrashInjectionSpec extends SparkSpec {
       replayConverges: Boolean): Int = {
     val pre = rows(template)
     val preCommits = LakeTable(spark, template).history.count()
+    val preMeta = metadata(template)
     var fuse = 0
     var completed = false
     while (!completed && fuse < MaxFusePositions) {
@@ -160,6 +173,14 @@ class CrashInjectionSpec extends SparkSpec {
           assert(got == post,
             s"$name fuse=$fuse: commit recorded (${opsAfter.mkString(",")}) " +
               s"but data is not the post-state")
+        val meta = metadata(dir, withFeed = preMeta.changes.nonEmpty)
+        assert(preMeta.history.subsetOf(meta.history),
+          s"$name fuse=$fuse: commit records lost: " +
+            s"${(preMeta.history -- meta.history).toSeq.sorted.mkString(",")}")
+        assert(meta.constraints == preMeta.constraints,
+          s"$name fuse=$fuse: constraints ${preMeta.constraints} became ${meta.constraints}")
+        assert(preMeta.changes.subsetOf(meta.changes),
+          s"$name fuse=$fuse: change-feed rows lost: ${preMeta.changes -- meta.changes}")
         if (replayConverges) {
           op(LakeTable(spark, dir))
           assert(rows(dir) == post,
@@ -177,10 +198,12 @@ class CrashInjectionSpec extends SparkSpec {
         // pre-crash states still hold the narrow type, and a wider probe
         // would be a (correctly) gated evolution, not a plain append
         val idType = LakeTable(spark, dir).read.schema("id").dataType
-        LakeTable(spark, dir).write(
-          Seq((999L, "z")).toDF("id", "v")
-            .select(col("id").cast(idType).as("id"), col("v"))
-            .coalesce(1), SaveMode.Append): Unit
+        val probe = Seq((999L, "z")).toDF("id", "v")
+          .select(col("id").cast(idType).as("id"), col("v")).coalesce(1)
+        // a Hive-partitioned recovered state takes a partitioned append
+        val parts = LakeTable(spark, dir).partitionColumns()
+        if (parts.isEmpty) LakeTable(spark, dir).write(probe, SaveMode.Append): Unit
+        else LakeTable(spark, dir).writePartitioned(probe, parts, SaveMode.Append): Unit
         assert(rows(dir) == (after :+ (999L -> "z")).sorted,
           s"$name fuse=$fuse: follow-up append broke the table")
       }
@@ -188,6 +211,19 @@ class CrashInjectionSpec extends SparkSpec {
     }
     assert(completed, s"$name: op still crashing after $MaxFusePositions fuse positions")
     fuse - 1 // positions exercised = last fuse value that fired
+  }
+
+  /** `withFeed = false` skips the change feed: a table whose template
+    * recorded none may hold only an op's unpublished change set.
+    */
+  private def metadata(dir: String, withFeed: Boolean = true): CrashInjectionSpec.Metadata = {
+    val lake = LakeTable(spark, dir)
+    val hasFeed = withFeed && new java.io.File(dir, LakeTable.ChangesDirName).exists
+    CrashInjectionSpec.Metadata(
+      lake.history.select("version", "operation").as[(Long, String)].collect().toSet,
+      lake.constraints,
+      if (!hasFeed) Set.empty
+      else lake.readChanges().collect().map(_.toString).toSet)
   }
 
   private def freshTemplate(name: String, smallAppends: Int = 0): String = {
@@ -223,6 +259,38 @@ class CrashInjectionSpec extends SparkSpec {
       post = (pre.filterNot(_._1 == 1L) ++ Seq((1L, "u"), (5L, "n"))).sorted,
       replayConverges = true)
     assert(n >= 8, s"upsert walk exercised only $n crash points")
+  }
+
+  /** Appends, a change-feed upsert and a CHECK constraint: the metadata
+    * a whole-table replacement must carry through its swap.
+    */
+  private def overwriteTemplate(name: String): String = {
+    val tpl = freshTemplate(name, smallAppends = 2)
+    val lake = LakeTable(spark, tpl)
+    lake.upsert(Seq((1L, "u")).toDF("id", "v"), Seq("id"), changeFeed = true): Unit
+    lake.addConstraint("id_nonneg", "id >= 0"): Unit
+    tpl
+  }
+
+  private val overwriteRows = Seq((20L, "o"), (21L, "o"), (22L, "p"))
+
+  test("overwrite keeps history, constraints and change feed from a crash at every metadata fs operation") {
+    val tpl = overwriteTemplate("overwrite")
+    val n = crashWalk("overwrite", tpl,
+      l => l.write(overwriteRows.toDF("id", "v").coalesce(1), SaveMode.Overwrite): Unit,
+      post = overwriteRows.sorted,
+      replayConverges = true)
+    assert(n >= 8, s"overwrite walk exercised only $n crash points")
+  }
+
+  test("partitioned overwrite keeps history, constraints and change feed from a crash at every metadata fs operation") {
+    val tpl = overwriteTemplate("partoverwrite")
+    val n = crashWalk("partoverwrite", tpl,
+      l => l.writePartitioned(overwriteRows.toDF("id", "v").coalesce(1), Seq("v"),
+        SaveMode.Overwrite): Unit,
+      post = overwriteRows.sorted,
+      replayConverges = true)
+    assert(n >= 8, s"partitioned overwrite walk exercised only $n crash points")
   }
 
   test("compactSmall (maintenance swap) converges from a crash at every metadata fs operation") {

@@ -521,6 +521,24 @@ class LakeTableSpec extends SparkSpec {
     assert(ops.contains("ADD CONSTRAINT") && ops.contains("DROP CONSTRAINT"))
   }
 
+  test("an overwrite validates constraints on its staged files, an empty partitioned batch included") {
+    val s = spark
+    import s.implicits._
+    val lake = LakeTable(spark, tmp())
+      .writePartitioned(Seq((1L, "a", 10.0)).toDF("id", "p", "x"), Seq("p"))
+      .addConstraint("x_positive", "x > 0")
+    val e = intercept[IllegalArgumentException] {
+      lake.writePartitioned(Seq((2L, "b", -1.0)).toDF("id", "p", "x"), Seq("p"))
+    }
+    assert(e.getMessage.contains("x_positive"))
+    assert(lake.read.select("id", "p", "x").as[(Long, String, Double)].collect().toSeq ===
+      Seq((1L, "a", 10.0)))
+    // an empty partitioned batch (SQL TRUNCATE) stages no parquet file
+    lake.writePartitioned(Seq.empty[(Long, String, Double)].toDF("id", "p", "x"), Seq("p"))
+    assert(lake.read.count() === 0)
+    assert(lake.constraints.keySet === Set("x_positive"))
+  }
+
   test("appendExpecting quarantines per-constraint instead of failing the batch") {
     val s = spark
     import s.implicits._
@@ -636,37 +654,7 @@ class LakeTableSpec extends SparkSpec {
     intercept[IllegalArgumentException](lake.readChanges(fromVersion = 999))
   }
 
-  test("a stale __changes_tmp from a crashed overwrite is recovered, never shadowed") {
-    val s = spark
-    import s.implicits._
-    val path = tmp()
-    val lake = LakeTable(spark, path)
-      .write(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "x"))
-    lake.upsert(Seq((1L, 11.0)).toDF("id", "x"), Seq("id"), changeFeed = true)
-    val recorded = lake.readChanges().count()
-    assert(recorded > 0)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val changesDir = new org.apache.hadoop.fs.Path(path, LakeTable.ChangesDirName)
-    val changesTmp = new org.apache.hadoop.fs.Path(s"$path${LakeTable.ChangesTmpSuffix}")
-    // simulate a crash between move-aside and restore: feed stranded in tmp
-    assert(fs.rename(changesDir, changesTmp))
-    lake.write(Seq((3L, 30.0)).toDF("id", "x")) // overwrite triggers recovery
-    assert(!fs.exists(changesTmp), "stale tmp dir must be cleaned up")
-    assert(lake.readChanges().count() === recorded, "recovered feed readable")
-    // crash variant where a FRESH feed dir was recreated before recovery:
-    // orphaned older version dirs fold back in beside the new ones
-    lake.upsert(Seq((3L, 33.0)).toDF("id", "x"), Seq("id"), changeFeed = true)
-    val total = lake.readChanges().count()
-    assert(fs.rename(changesDir, changesTmp))
-    lake.upsert(Seq((3L, 34.0)).toDF("id", "x"), Seq("id"), changeFeed = true)
-    lake.write(Seq((4L, 40.0)).toDF("id", "x"))
-    assert(!fs.exists(changesTmp))
-    assert(lake.readChanges().count() === total + 2,
-      "older versions recovered alongside the post-crash change set")
-  }
-
-  test("vacuumDebris removes an orphaned staged rewrite and recovers a stranded feed") {
+  test("vacuumDebris removes an orphaned unmarked staged rewrite and keeps the feed") {
     val s = spark
     import s.implicits._
     val path = tmp()
@@ -675,15 +663,11 @@ class LakeTableSpec extends SparkSpec {
     val recorded = lake.readChanges().count()
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // crash debris: a staged table copy and a feed stranded mid-move
+    // crash debris: a staged table copy that never reached its mark
     val staged = new org.apache.hadoop.fs.Path(s"$path${LakeTable.StageSuffix}")
     fs.mkdirs(staged)
-    assert(fs.rename(
-      new org.apache.hadoop.fs.Path(path, LakeTable.ChangesDirName),
-      new org.apache.hadoop.fs.Path(s"$path${LakeTable.ChangesTmpSuffix}")))
     lake.vacuumDebris()
     assert(!fs.exists(staged))
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path${LakeTable.ChangesTmpSuffix}")))
     assert(lake.readChanges().count() === recorded)
     assert(lake.history.select("operation").collect()
       .map(_.getString(0)).contains("VACUUM DEBRIS"))

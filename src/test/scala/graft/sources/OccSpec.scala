@@ -138,15 +138,42 @@ class OccSpec extends SparkSpec {
     val path = s"$root/t"
     val lake = LakeTable(spark, path)
       .write(Seq((1L, 1.0), (2L, 2.0)).toDF("id", "x").repartition(2))
+    // a vectored delete takes no stage claim, so it can commit while the
+    // compaction's stage is built — and it removes rows, so no rebase
     lake.onStagedForTest = () => {
       lake.onStagedForTest = () => ()
-      LakeTable(spark, path).write(Seq((9L, 9.0)).toDF("id", "x"), SaveMode.Overwrite)
+      LakeTable(spark, path).deleteVectored(col("id") === 1L): Unit
     }
     val e = intercept[java.util.ConcurrentModificationException] { lake.compact() }
     assert(e.getMessage.contains("concurrent commit"))
-    // the overwrite (the commit that won) is intact; the stage is gone
-    assert(lake.read.as[(Long, Double)].collect().toSeq === Seq((9L, 9.0)))
+    // the delete (the commit that won) is intact; the stage is gone
+    assert(lake.read.as[(Long, Double)].collect().toSeq === Seq((2L, 2.0)))
     assert(!new java.io.File(s"$path${LakeTable.StageSuffix}").exists)
+  }
+
+  test("an overwrite while a compaction holds the stage claim is refused, and the compaction lands") {
+    val root = Files.createTempDirectory("graft_occ_claim").toString
+    val path = s"$root/t"
+    val lake = LakeTable(spark, path)
+      .write(Seq((1L, 1.0), (2L, 2.0)).toDF("id", "x").repartition(2))
+    var refused: Option[java.util.ConcurrentModificationException] = None
+    lake.onStagedForTest = () => {
+      lake.onStagedForTest = () => ()
+      refused = Some(intercept[java.util.ConcurrentModificationException] {
+        LakeTable(spark, path).write(Seq((9L, 9.0)).toDF("id", "x"), SaveMode.Overwrite)
+      })
+    }
+    lake.compact()
+    assert(refused.exists(_.getMessage.contains("stage claim")), refused)
+    assert(lake.read.orderBy("id").as[(Long, Double)].collect().toSeq ===
+      Seq((1L, 1.0), (2L, 2.0)))
+    val ops = lake.history.select("operation").as[String].collect().toSeq
+    assert(ops === Seq("COMPACT", "WRITE OVERWRITE")) // newest first
+    assert(!new java.io.File(s"$path${LakeTable.StageSuffix}").exists)
+    assert(!new java.io.File(s"$path${LakeTable.StageClaimSuffix}").exists)
+    // the refused overwrite retried after the compaction lands
+    LakeTable(spark, path).write(Seq((9L, 9.0)).toDF("id", "x"), SaveMode.Overwrite)
+    assert(lake.read.as[(Long, Double)].collect().toSeq === Seq((9L, 9.0)))
   }
 
   test("dynamic partition overwrites on DISJOINT partitions both land") {

@@ -78,4 +78,20 @@ class OptimizeWhereSpec extends SparkSpec {
     }
     assert(e.getMessage.toLowerCase.contains("zorder"))
   }
+
+  test("optimize, optimizeZorder and optimizeHilbert keep a Hive-partitioned layout") {
+    val path = tmp()
+    val lake = fragmented(path)
+    val before = lake.read.orderBy("id").as[(Long, String)].collect().toSeq
+    lake.optimize(Seq("id"))
+    assert(lake.partitionColumns() === Seq("part"))
+    lake.optimizeZorder(Seq("id"), numFiles = Some(2))
+    assert(lake.partitionColumns() === Seq("part"))
+    lake.optimizeHilbert(Seq("id"), numFiles = Some(2))
+    assert(lake.partitionColumns() === Seq("part"))
+    // no flat files beside the partition dirs, and the rows are unchanged
+    assert(!hfs(path).listStatus(new HPath(path)).exists(_.getPath.getName.endsWith(".parquet")))
+    assert(filesIn(path, "part=A").nonEmpty && filesIn(path, "part=B").nonEmpty)
+    assert(lake.read.orderBy("id").as[(Long, String)].collect().toSeq === before)
+  }
 }
