@@ -222,7 +222,8 @@ object TwinAttemptProbe {
         val dir = freshDir("seldel")
         val lake = LakeTable(spark, dir)
         // range-clustered files so the stats pruner keeps most of them —
-        // the SELECTIVE swap path (swapSelectiveClaimed) under the twin
+        // the swap's SELECTIVE shape (kept files ride the manifest) under
+        // the twin
         lake.write(spark.range(0, 40).select(col("id"),
           lit("a").as("v")).repartitionByRange(4, col("id")))
         lake.collectStats(Seq("id")): Unit

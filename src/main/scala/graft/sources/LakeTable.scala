@@ -113,8 +113,8 @@ final class LakeTable(spark: SparkSession, val path: String) {
   /** Write (overwrite or append) and record a commit.
     *
     * Append lands through a private stage ([[appendViaStage]]). Every
-    * other mode replaces the table through the full staged rewrite
-    * ([[rewrite]]): the batch is written and validated beside the table,
+    * other mode replaces the table through the one staged swap
+    * ([[stagedSwap]]): the batch is written and validated beside the table,
     * then swapped in with the commit log, side files and change feed
     * carried through — the live table directory is never deleted in
     * place, so a crash leaves the old table or a marked stage that
@@ -160,7 +160,7 @@ final class LakeTable(spark: SparkSession, val path: String) {
     val append = mode == SaveMode.Append
     // a replacing write's OCC base, taken before its schema read: any
     // commit (data or DDL) landing from here on refuses the swap
-    val occBase = if (append) None else Some(CommitLog.nextVersion(fs, logDir))
+    val occBase = Option.when(!append)(CommitLog.nextVersion(fs, logDir))
     val ic = idCols
     requireNoIdentityProvided(df,
       if (partitionBy.isDefined) "writePartitioned" else "write", ic)
@@ -188,8 +188,8 @@ final class LakeTable(spark: SparkSession, val path: String) {
     } else
       // constraints (and generated-column checks) validate the staged
       // files, read after the staging job — nothing upstream runs twice
-      rewrite(assigned, op, params, occBase = occBase,
-        partitionCols = partitionCols.map(physicalOf),
+      stagedSwap(Some(assigned), op, params, occBase.get,
+        partitionCols = Some(partitionCols.map(physicalOf)),
         replaceSchema = overwriteSchema, extraChecks = genChecks)
   }
 
@@ -619,7 +619,7 @@ final class LakeTable(spark: SparkSession, val path: String) {
         .parquet(staged.toString)
       // final check against everything that landed while staging ran;
       // the residual window from here to the commit is the same
-      // metadata-only window occCheck documents
+      // metadata-only window occResolve documents
       occCheckPartitions(occExpected, touched, op)
       // late-constraint gate at the mark (see lateConstraintCheck's
       // placement contract): a DDL published during the staging job is
@@ -721,7 +721,7 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * because the staged overwrite mutates nothing in the table until the
     * per-partition swap behind the second check; the residual window
     * from that check to the commit is the same metadata-only window
-    * [[occCheck]] documents.
+    * [[occResolve]] documents.
     */
   private def occCheckPartitions(
       expected: Long, touched: Set[String], op: String): Unit = {
@@ -842,9 +842,9 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * left_anti join (current minus touched keys) + a union, staged to a
     * sibling dir and swapped — the table is never read and overwritten
     * in the same job. At scale the anti join is the cost: updates
-    * broadcast when small (AQE), else a key shuffle; with a partitioned
-    * layout prefer [[overwritePartitions]] to rewrite only touched
-    * partitions.
+    * broadcast when small (AQE), else a key shuffle. A Hive-partitioned
+    * table keeps its layout; [[overwritePartitions]] rewrites only the
+    * touched partitions when the batch holds whole partitions.
     */
   def upsert(
       updates: DataFrame, keys: Seq[String], changeFeed: Boolean = false,
@@ -852,7 +852,7 @@ final class LakeTable(spark: SparkSession, val path: String) {
       extraParams: Map[String, String] = Map.empty): LakeTable = {
     val cur = evolveTarget(read, updates, schemaEvolution)
     // OCC base after evolveTarget's (metadata-only) commit — see merge()
-    val occBase = Some(CommitLog.nextVersion(fs, logDir))
+    val occBase = CommitLog.nextVersion(fs, logDir)
     val gc = genCols
     require(keys.nonEmpty && keys.forall(cur.columns.contains),
       s"merge keys $keys must exist in the table")
@@ -931,20 +931,15 @@ final class LakeTable(spark: SparkSession, val path: String) {
     // widened merge must take the full rewrite
     val widened = storedSchema.exists(s =>
       !s.fieldNames.sameElements(cur.schema.fieldNames))
+    def upserted(target: DataFrame): DataFrame = aligned.unionByName(
+      target.join(aligned.select(keys.map(col): _*), keys, "left_anti"))
     val selective =
       if (widened || !selectiveEligible) None
       else sourceKeyCondition(aligned, keys).flatMap { keyCond =>
-        rewriteSelective(keyCond,
-          affected => aligned.unionByName(
-            affected.join(aligned.select(keys.map(col): _*), keys, "left_anti")),
-          "MERGE", params + ("selective" -> "true"),
-          changeStage = None, alwaysTransform = true, occBase = occBase)
+        rewriteSelective(keyCond, "MERGE", params + ("selective" -> "true"),
+          changeStage = None, occBase)(a => Some(a.fold(aligned)(upserted)))
       }
-    selective.getOrElse {
-      val untouched = cur.join(
-        aligned.select(keys.map(col): _*), keys, "left_anti")
-      rewrite(aligned.unionByName(untouched), "MERGE", params, occBase = occBase)
-    }
+    selective.getOrElse(stagedSwap(Some(upserted(cur)), "MERGE", params, occBase))
   }
 
   /** Cheap eligibility gate for the selective-rewrite path: without
@@ -1063,7 +1058,7 @@ final class LakeTable(spark: SparkSession, val path: String) {
     // OCC base AFTER evolveTarget (its ADD COLUMNS commit is our own,
     // metadata-only — data files are unchanged) but before every data
     // job below derives from the snapshot
-    val occBase = Some(CommitLog.nextVersion(fs, logDir))
+    val occBase = CommitLog.nextVersion(fs, logDir)
     val gc = genCols
     val ic = idCols
     requireNoIdentityProvided(source, "MERGE source", ic)
@@ -1258,11 +1253,11 @@ final class LakeTable(spark: SparkSession, val path: String) {
             case ps    => sourceKeyCondition(src, ps).map(keyCond && _).getOrElse(keyCond)
           }
         })
+      // no affected file: an insert-only merge stages its inserts alone
       val selective = keyCondOpt.flatMap { cond =>
-        rewriteSelective(cond, affected => resultOver(affected),
-          "MERGE", mergeParams + ("selective" -> "true"),
-          changeStage = None, alwaysTransform = insertUnmatched,
-          occBase = occBase)
+        rewriteSelective(cond, "MERGE", mergeParams + ("selective" -> "true"),
+          changeStage = None, occBase)(
+          _.orElse(Option.when(insertUnmatched)(readFiles(Nil))).map(resultOver))
       }
       selective match {
         case Some(t) => return t
@@ -1301,27 +1296,25 @@ final class LakeTable(spark: SparkSession, val path: String) {
         ).flatten.reduce(_ unionByName _)
         Some(writeChanges(changes))
       }
-    rewriteWithFeed(result, "MERGE",
+    stagedSwap(Some(result), "MERGE",
       Map("keys" -> keys.mkString(","), "clauses" -> whenMatched.length.toString,
         "changeFeed" -> changeFeed.toString) ++ extraParams ++ idParams,
-      changeStage, occBase)
+      occBase, changeStage = changeStage)
   }
 
   /** Delta `DELETE FROM table WHERE cond`: removes rows where `cond`
     * evaluates TRUE; rows where it is false OR NULL are kept (SQL
     * three-valued semantics, same as Delta). Compiled to one staged
-    * rewrite of the survivors — the predicate reaches the parquet scan,
-    * so files whose min/max stats exclude it are never read, but the
-    * SURVIVORS are all rewritten; on a partitioned layout prefer
-    * partition-aligned predicates + [[overwritePartitions]] so only
-    * touched partitions rewrite.
+    * rewrite of the survivors: with file stats only the files whose
+    * min/max admit `cond` are rewritten ([[rewriteSelective]]), else
+    * every survivor is. A Hive-partitioned table keeps its layout.
     *
     * @param changeFeed record the deleted rows (`_change_type = delete`)
     *                   under this commit's version, like merge's CDF
     */
   def delete(cond: Column, changeFeed: Boolean = false): LakeTable = {
     // OCC base before the snapshot read — see update()
-    val occBase = Some(CommitLog.nextVersion(fs, logDir))
+    val occBase = CommitLog.nextVersion(fs, logDir)
     val cur = read
     val hit = coalesce(cond, lit(false))
     val changeStage =
@@ -1329,9 +1322,9 @@ final class LakeTable(spark: SparkSession, val path: String) {
       else Some(writeChanges(
         cur.where(hit).withColumn("_change_type", lit("delete"))))
     val params = Map("predicate" -> cond.toString, "changeFeed" -> changeFeed.toString)
-    rewriteSelective(cond, a => a.where(!coalesce(cond, lit(false))),
-        "DELETE", params, changeStage, occBase = occBase)
-      .getOrElse(rewriteWithFeed(cur.where(!hit), "DELETE", params, changeStage, occBase))
+    rewriteSelective(cond, "DELETE", params, changeStage, occBase)(_.map(_.where(!hit)))
+      .getOrElse(stagedSwap(Some(cur.where(!hit)), "DELETE", params, occBase,
+        changeStage = changeStage))
   }
 
   /** Predicate-scoped atomic overwrite (Delta's `replaceWhere` — the
@@ -1356,7 +1349,7 @@ final class LakeTable(spark: SparkSession, val path: String) {
   def replaceWhere(
       df: DataFrame, cond: Column, changeFeed: Boolean = false): LakeTable = {
     // OCC base before the snapshot read — see update()
-    val occBase = Some(CommitLog.nextVersion(fs, logDir))
+    val occBase = CommitLog.nextVersion(fs, logDir)
     val cur = read
     val ic = idCols
     requireNoIdentityProvided(df, "replaceWhere", ic)
@@ -1384,11 +1377,10 @@ final class LakeTable(spark: SparkSession, val path: String) {
           .unionByName(toInsert.withColumn("_change_type", lit("insert")))))
     val params = Map("predicate" -> cond.toString,
       "mode" -> "replaceWhere", "changeFeed" -> changeFeed.toString) ++ idParams
-    rewriteSelective(cond, a => keep(a).unionByName(toInsert),
-        "REPLACE WHERE", params, changeStage = changeStage,
-        alwaysTransform = true, occBase = occBase)
-      .getOrElse(rewriteWithFeed(keep(cur).unionByName(toInsert),
-        "REPLACE WHERE", params, changeStage, occBase = occBase))
+    rewriteSelective(cond, "REPLACE WHERE", params, changeStage, occBase)(a =>
+        Some(a.fold(toInsert)(keep(_).unionByName(toInsert))))
+      .getOrElse(stagedSwap(Some(keep(cur).unionByName(toInsert)),
+        "REPLACE WHERE", params, occBase, changeStage = changeStage))
   }
 
   /** Idempotent file ingest (Databricks/Delta `COPY INTO` analogue):
@@ -1668,8 +1660,8 @@ final class LakeTable(spark: SparkSession, val path: String) {
       set: Map[String, Column], cond: Column, changeFeed: Boolean = false): LakeTable = {
     // OCC base captured BEFORE the snapshot read: every job below (the
     // change-feed materialization included) derives from this version,
-    // so a commit landing during any of them must trip occCheck
-    val occBase = Some(CommitLog.nextVersion(fs, logDir))
+    // so a commit landing during any of them must trip occResolve
+    val occBase = CommitLog.nextVersion(fs, logDir)
     val cur = read
     val gc = genCols
     val bad = set.keys.filterNot(cur.columns.contains)
@@ -1686,10 +1678,11 @@ final class LakeTable(spark: SparkSession, val path: String) {
     // generated columns recompute AFTER the SET applies, so dependency
     // changes propagate (on untouched rows the recomputation is
     // value-identical — the deterministic-expression contract)
-    val result = recomputeGenerated(cur.select(fields.map { f =>
-      if (set.contains(f.name)) when(hit, post(f)).otherwise(col(f.name)).as(f.name)
-      else col(f.name)
-    }.toIndexedSeq: _*), gc)
+    def updated(target: DataFrame): DataFrame =
+      recomputeGenerated(target.select(fields.map { f =>
+        if (set.contains(f.name)) when(hit, post(f)).otherwise(col(f.name)).as(f.name)
+        else col(f.name)
+      }.toIndexedSeq: _*), gc)
     val changeStage =
       if (!changeFeed) None
       else {
@@ -1703,257 +1696,248 @@ final class LakeTable(spark: SparkSession, val path: String) {
     val params = Map("predicate" -> cond.toString,
       "set" -> set.keys.toSeq.sorted.mkString(","),
       "changeFeed" -> changeFeed.toString)
-    rewriteSelective(cond, a => {
-        val h = coalesce(cond, lit(false))
-        recomputeGenerated(a.select(fields.map { f =>
-          if (set.contains(f.name)) when(h, post(f)).otherwise(col(f.name)).as(f.name)
-          else col(f.name)
-        }.toIndexedSeq: _*), gc)
-      }, "UPDATE", params, changeStage, occBase = occBase)
-      .getOrElse(rewriteWithFeed(result, "UPDATE", params, changeStage, occBase))
+    rewriteSelective(cond, "UPDATE", params, changeStage, occBase)(_.map(updated))
+      .getOrElse(stagedSwap(Some(updated(cur)), "UPDATE", params, occBase,
+        changeStage = changeStage))
   }
 
-  /** Shared commit path for operations that staged a change set before
-    * their rewrite.
+  /** Selective DML — the Delta-style file-level path: only the files
+    * whose recorded min/max stats admit a `cond` match are read
+    * (deletion vectors applied) and handed to `transform`; every other
+    * file MOVES through the staged swap untouched (a metadata rename,
+    * zero data I/O). At 100 TB with a clustered predicate column this
+    * turns a full-table rewrite into a rewrite of the handful of files
+    * actually holding matching rows. `transform` gets None when pruning
+    * leaves no file to read: an insert-only MERGE still stages its
+    * inserts, a DELETE or UPDATE stages nothing.
     *
-    * Abort (staged write or constraint failure, table untouched): the
-    * staged set describes a commit that never happened — discard it
-    * (it was never visible, so no reader can have seen it). Commit:
-    * publish the stage at the version actually won, so readChanges'
-    * `_commit_version` is truthful by construction and the set becomes
-    * visible only after its commit record exists. The stage name rides
-    * the commit params so a crash between commit and publication is
-    * recoverable ([[vacuumDebris]] publishes claimed stages).
-    */
-  private def rewriteWithFeed(
-      result: DataFrame, op: String, params: Map[String, String],
-      changeStage: Option[String],
-      occBase: Option[Long] = None): LakeTable =
-    rewrite(result, op,
-      params ++ changeStage.map(LakeTable.ChangeStageParam -> _),
-      onAbort = () => changeStage.foreach(discardChanges),
-      onCommit = actual => changeStage.foreach(publishChanges(_, actual)),
-      occBase = occBase)
-
-  /** Selective DELETE/UPDATE rewrite — the Delta-style file-level path:
-    * rewrite ONLY the files whose recorded min/max stats admit a `cond`
-    * match; every other file is MOVED through the staged swap untouched
-    * (a metadata rename, zero data I/O). At 100 TB with a clustered
-    * predicate column this turns a full-table rewrite into a rewrite of
-    * the handful of files actually holding matching rows.
+    * Returns None (the caller runs the full replacement) when: no stats
+    * are recorded; the table is a shallow clone (its files live in the
+    * source dir, which the local listing can't see); the layout is
+    * Hive-partitioned (untouched files would ride the manifest inside
+    * partition dirs the swap's gather does not create); or pruning keeps
+    * nothing (every file may match, so the full replacement is the same
+    * work).
     *
-    * Returns None (caller falls back to the full staged rewrite) when:
-    * no stats are recorded; the layout is Hive-partitioned (new files
-    * land at the table root, which would break partition-column
-    * discovery — use partition-aligned predicates + overwritePartitions
-    * there); or pruning keeps nothing (every file may match).
-    *
-    * Durability: the swap reuses the manifest protocol — after the
-    * manifest lands in the stage, a crash is COMPLETED by
-    * [[vacuumDebris]], never discarded, so moved untouched files can't
-    * be lost. The stats dir survives the swap (untouched files keep
-    * their paths, so their rows stay valid); only the rewritten files
-    * lose skipping until the next [[collectStats]].
+    * The stats and DV dirs ride [[stagedSwap]] beside the untouched
+    * files, whose rows in them stay valid; only the rewritten files lose
+    * skipping until the next [[collectStats]].
     */
   private def rewriteSelective(
-      cond: Column,
-      transformAffected: DataFrame => DataFrame,
-      op: String, params: Map[String, String],
-      changeStage: Option[String],
-      alwaysTransform: Boolean = false,
-      occBase: Option[Long] = None): Option[LakeTable] = {
-    if (!fs.exists(new Path(statsDir))) return None
-    // a shallow clone's files live in the SOURCE dir, which the local
-    // listing can't see — fall back to the full rewrite, which reads
-    // through the manifest and detaches the clone in the same swap
-    if (isShallowClone) return None
+      cond: Column, op: String, params: Map[String, String],
+      changeStage: Option[String], occBase: Long)(
+      transform: Option[DataFrame] => Option[DataFrame]): Option[LakeTable] = {
+    if (!selectiveEligible) return None
     val all = listDataFiles()
     if (all.exists(_._1.contains("/"))) return None // partitioned layout
     val mightMatch = prunedFiles(cond).toSet
-    val affected = all.filter(t => mightMatch.contains(t._3))
-    val untouched = all.filterNot(t => mightMatch.contains(t._3))
+    val (affected, untouched) = all.partition(t => mightMatch.contains(t._3))
     if (untouched.isEmpty) return None // nothing saved: full rewrite is equal
-    Some(swapSelective(affected, untouched, transformAffected, op, params,
-      changeStage, alwaysTransform, occBase))
+    Some(stagedSwap(transform(Option.when(affected.nonEmpty)(readFiles(affected))),
+      op, params, occBase, replaced = Some(affected), untouched = untouched,
+      changeStage = changeStage, partitionCols = Some(Nil)))
   }
 
-  /** The staged PARTIAL swap shared by every selective rewrite: write
-    * `transformAffected(affected files)` to the stage, move the
-    * untouched files (plus the stats and DV dirs) through via the
-    * manifest, complete, commit. Callers decide WHICH files are
-    * affected — by stats pruning ([[rewriteSelective]]) or by size
-    * ([[compactSmall]]).
+  /** The rows of listed `files` under the stored schema, deletion
+    * vectors applied: untouched files keep their (still-valid) vectors
+    * through a swap, so rows a merge-on-read DELETE removed must not
+    * resurrect in the rewritten ones. No files: an empty frame.
     */
-  private def swapSelective(
-      affected: Seq[(String, String, String)],
-      untouched: Seq[(String, String, String)],
-      transformAffected: DataFrame => DataFrame,
-      op: String, params: Map[String, String],
-      changeStage: Option[String],
-      alwaysTransform: Boolean,
-      occBase: Option[Long] = None,
-      rebaseBaseFiles: Option[Set[String]] = None,
-      keepSideDirs: Boolean = true): LakeTable = {
-    claimStage(op)
-    try swapSelectiveClaimed(affected, untouched, transformAffected, op,
-      params, changeStage, alwaysTransform, occBase, rebaseBaseFiles,
-      keepSideDirs)
-    finally releaseStage()
+  private def readFiles(files: Seq[(String, String, String)]): DataFrame = {
+    val schema = storedSchema.getOrElse(read.schema)
+    if (files.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    else applyDeletionVectors(readMapped(schema, files.map(_._3)))
   }
 
-  private def swapSelectiveClaimed(
-      affected: Seq[(String, String, String)],
-      untouched: Seq[(String, String, String)],
-      transformAffected: DataFrame => DataFrame,
-      op: String, params: Map[String, String],
-      changeStage: Option[String],
-      alwaysTransform: Boolean,
-      occBase: Option[Long],
-      rebaseBaseFiles: Option[Set[String]],
-      keepSideDirs: Boolean): LakeTable = {
-    val staged = new Path(s"$path${LakeTable.StageSuffix}")
-    // same OCC contract as rewrite(): the affected/untouched file split
-    // and the transform's input derive from the caller's snapshot
-    // version (passed down when the caller read earlier; captured here
-    // for direct callers whose listing happens at call time)
-    val occExpected = occBase.getOrElse(CommitLog.nextVersion(fs, logDir))
-    // a MERGE with zero affected files still has INSERTS to land
-    // (alwaysTransform feeds the transform an empty frame); a DELETE
-    // whose predicate matches nothing writes nothing
-    val transforming = affected.nonEmpty || alwaysTransform
+  /** The one staged swap behind every non-append replacement of the
+    * table's files: full replacements (every non-append
+    * [[write]]/[[writePartitioned]], MERGE, DELETE and UPDATE without
+    * stats, SCD2, the generated/identity backfills, [[materialize]],
+    * [[reorgPurge]]), stats-pruned DML ([[rewriteSelective]]) and
+    * maintenance ([[maintenanceRewrite]], [[compactSmall]]). It never
+    * reads and overwrites one location in a job and never deletes the
+    * live table in place:
+    *
+    *   1. claim the table's single stage slot ([[claimStage]]);
+    *   2. write `staged` (the caller's frame; None stages nothing) to the
+    *      stage, in the table's current Hive layout unless
+    *      `partitionCols` names one, and validate the constraints and
+    *      `extraChecks` against the staged files;
+    *   3. resolve OCC against `occBase`, the version the caller took
+    *      BEFORE its snapshot read ([[occResolve]]);
+    *   4. publish the known-file set, the pending op and the manifest —
+    *      the point of no return: from here a crash is COMPLETED by
+    *      [[vacuumDebris]], never discarded;
+    *   5. [[completeSwap]]: gather the untouched and rebased files (and
+    *      the stats and DV dirs when untouched files ride, since their
+    *      rows stay valid) and the log into the stage, clear the old
+    *      children, place the stage's;
+    *   6. audit the commits that landed while the swap ran, then commit
+    *      exactly once ([[commitIfAbsent]], keyed by the swap uuid); a
+    *      staged change set publishes at the version won, so
+    *      readChanges' `_commit_version` is truthful by construction.
+    *
+    * A pre-swap failure deletes the stage and discards `changeStage`
+    * (it was never visible); the table is untouched. A failure to
+    * release the claim is suppressed onto the operation's own error.
+    *
+    * @param replaced      listed files `staged` replaces (default: every
+    *                      data file, listed at entry)
+    * @param untouched     listed files that ride the manifest unchanged
+    * @param rebase        `staged` is a content-preserving function of
+    *                      exactly `replaced ++ untouched`: concurrent
+    *                      pure appends compose instead of refusing
+    * @param plainNames    write `staged`'s column names verbatim (no
+    *                      logical-to-physical mapping)
+    * @param onStagedLog   metadata edit applied to the moved log after
+    *                      the point of no return, so it flips atomically
+    *                      with the data (the log then moves before the
+    *                      gather instead of last)
+    * @param partitionCols physical columns the staged files are
+    *                      Hive-partitioned by (default: the table's
+    *                      current layout)
+    * @param replaceSchema take `staged`'s schema verbatim instead of
+    *                      merging it with the stored one (overwriteSchema)
+    * @param extraChecks   checks validated with the table's constraints
+    *                      against the staged files (generated columns)
+    */
+  private[sources] def stagedSwap(
+      staged: Option[DataFrame], op: String, params: Map[String, String],
+      occBase: Long,
+      replaced: Option[Seq[(String, String, String)]] = None,
+      untouched: Seq[(String, String, String)] = Nil,
+      changeStage: Option[String] = None,
+      rebase: Boolean = false,
+      plainNames: Boolean = false,
+      onStagedLog: Option[Path => Unit] = None,
+      partitionCols: Option[Seq[String]] = None,
+      replaceSchema: Boolean = false,
+      extraChecks: Map[String, String] = Map.empty): LakeTable = {
+    claimStage(op)
     try {
-      if (transforming) {
-        // deletion vectors must filter the affected input too, or rows a
-        // prior merge-on-read DELETE removed would resurrect in the
-        // rewritten files; untouched files keep their (still-valid)
-        // vectors via the manifest below
-        val input =
-          if (affected.nonEmpty) {
-            val schema = storedSchema.getOrElse(read.schema)
-            applyDeletionVectors(readMapped(schema, affected.map(_._3)))
-          } else
-            spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-              storedSchema.getOrElse(read.schema))
-        toPhysical(transformAffected(input))
-          .write.mode(SaveMode.Overwrite).parquet(staged.toString)
-      } else {
-        // the stage is just an empty dir the untouched files move through
-        fs.mkdirs(staged): Unit
+      val stage = new Path(s"$path${LakeTable.StageSuffix}")
+      val replacedFiles = replaced.getOrElse(
+        if (fs.exists(new Path(path))) listDataFiles() else Nil)
+      val base = (replacedFiles ++ untouched).map(_._1)
+      // Spark part-file names embed the job UUID, so a staged file is not
+      // expected to share a name with a file riding the manifest — but a
+      // clash would silently drop one in the swap, so check loudly
+      lazy val stagedNames = fs.listStatus(stage)
+        .map(_.getPath.getName).filter(_.endsWith(".parquet")).toSet
+      def requireNoClash(riders: Seq[String], what: String): Unit = {
+        val clash = riders.filter(n => stagedNames.contains(n))
+        require(clash.isEmpty, s"staged rewrite collides with $what: ${clash.mkString(", ")}")
       }
-      val cons = constraints
-      if (cons.nonEmpty && transforming) {
-        // untouched files were already validated when written
-        try enforceConstraints(stagedLogical(staged.toString), cons)
-        catch { case e: Throwable => fs.delete(staged, true); throw e }
+      val (rebased, resolvedNext) =
+        try {
+          staged match {
+            case Some(frame) =>
+              val layout = partitionCols.getOrElse {
+                val dirs = partitionColumns() // directory names: physical
+                val inv = if (plainNames) columnMapping._1.map(_.swap) else Map.empty[String, String]
+                dirs.map(d => inv.getOrElse(d, d))
+              }
+              val written = if (plainNames) frame else toPhysical(frame)
+              val w = written.write.mode(SaveMode.Overwrite)
+              (if (layout.isEmpty) w else w.partitionBy(layout: _*)).parquet(stage.toString)
+              // constraints validate the STAGED files (nothing recomputed;
+              // untouched files were validated when written). Read with the
+              // written schema: an empty output stages no parquet file to
+              // infer one from (TRUNCATE of a constrained table)
+              val cons = constraints ++ extraChecks
+              if (cons.nonEmpty) {
+                val raw = spark.read.schema(written.schema).parquet(stage.toString)
+                enforceConstraints(if (plainNames) raw else logicalView(raw), cons)
+              }
+            case None => fs.mkdirs(stage): Unit // a dir untouched files move through
+          }
+          requireNoClash(untouched.map(_._1), "kept files")
+          onStagedForTest()
+          val resolved = occResolve(occBase, op, Option.when(rebase)(base.toSet))
+          requireNoClash(resolved._1, "concurrently appended files")
+          resolved
+        } catch {
+          case e: Throwable =>
+            try { fs.delete(stage, true): Unit; changeStage.foreach(discardChanges) }
+            catch { case r: Throwable => e.addSuppressed(r) }
+            throw e
+        }
+      // the pending op carries the change-stage claim and a swap uuid: a
+      // recovery completing this stage then attributes the op WITH its
+      // change set (the set publishes at the recovered version instead of
+      // aging out unclaimed — silent CDC starvation), and the live writer
+      // racing that recovery adopts the attribution by uuid
+      val swapId = java.util.UUID.randomUUID().toString.take(12)
+      val taggedParams = params ++ changeStage.map(LakeTable.ChangeStageParam -> _) +
+        (LakeTable.SwapStageParam -> swapId)
+      // the snapshot's complete file accounting, published before the
+      // manifest so a marked stage is always sweep-capable: replaced
+      // files die with the old children, everything else rides the
+      // manifest, and any table-dir file NOT listed here is a concurrent
+      // append completeSwap carries through instead of deleting
+      LakeIo.atomicOverwrite(fs, new Path(stage, LakeTable.KnownFilesName),
+        (base ++ rebased).mkString("\n"))
+      writeManifest(stage, untouched.map(_._1) ++ rebased ++
+        (if (untouched.isEmpty) Nil else Seq(LakeTable.StatsDirName, LakeTable.DvDirName)),
+        op, taggedParams)
+      onSwapMarkedForTest()
+      onStagedLog.foreach { edit =>
+        val stagedLog = new Path(stage, LakeTable.LogDirName)
+        if (fs.exists(logDir)) fs.rename(logDir, stagedLog)
+        edit(stagedLog)
       }
+      // same-process completion: commit inline below
+      val (_, sweptLate) = completeSwap(stage)
+      // post-swap audit (closing the window after occResolve's reads): a
+      // commit landing after them rode the moved log (completeSwap moves
+      // the log LAST, so it is visible here) and its top-level data files
+      // survived the swap as unaccounted files. A rebasing swap composes
+      // with pure appends exactly as occResolve does — proceed and record
+      // the sweep. Anything else (a non-append interloper, or an op whose
+      // result derives from the content and cannot absorb unseen commits)
+      // refuses to stack its commit on top of the interleaving. A
+      // RECOVERED commit carrying THIS swap's uuid is a concurrent
+      // recovery attributing this very op (commitIfAbsent adopts it); a
+      // VACUUM DEBRIS commit is metadata-only (the recovery twin's own
+      // bookkeeping). (A commit racing the log's own move is the
+      // residual, metadata-only window occResolve documents.)
+      val postSwapNext = CommitLog.nextVersion(fs, logDir)
+      if (postSwapNext != resolvedNext) {
+        val foreign = CommitLog.recordsSince(fs, logDir, resolvedNext)
+          .filterNot(_.params.get(LakeTable.SwapStageParam).contains(swapId))
+          .filterNot(_.operation == "VACUUM DEBRIS")
+        if (foreign.exists(r => !rebase || !isPureAppend(r)))
+          throw new java.util.ConcurrentModificationException(
+            s"$op at $path: commit(s) v$resolvedNext..v${postSwapNext - 1} landed " +
+              "while the swap was in flight (their data files were carried " +
+              "through it where present). This operation's commit was NOT " +
+              "recorded — reconcile from history or RESTORE a pre-swap version.")
+      }
+      // a full replacement's frame IS the table now: keep the stored
+      // schema in lockstep with the new files. A swap keeping untouched
+      // files never narrows it (their rows are written in it)
+      if (untouched.isEmpty) staged.foreach(f => saveSchema(f.schema, replace = replaceSchema))
+      // adopt-or-commit is exactly-once THROUGH the log, not check-then-
+      // act: a recovery twin between its completeSwap and its RECOVERED
+      // commit is invisible to any snapshot read here, so the decision is
+      // made by commitIfAbsent's scan-then-claim-exactly-v loop instead
+      val actual = commitIfAbsent(
+        op, taggedParams ++
+          Map("filesRewritten" -> replacedFiles.size.toString,
+            "filesKept" -> untouched.size.toString) ++
+          (if (rebased.nonEmpty) Map("filesRebased" -> rebased.size.toString)
+           else Map.empty) ++
+          (if (sweptLate > 0) Map("filesSweptLate" -> sweptLate.toString)
+           else Map.empty),
+        LakeTable.SwapStageParam, swapId, resolvedNext)
+      changeStage.foreach(publishChanges(_, actual))
     } catch {
       case e: Throwable =>
-        try changeStage.foreach(discardChanges)
-        catch { case r: Throwable => e.addSuppressed(r) }
+        try releaseStage() catch { case r: Throwable => e.addSuppressed(r) }
         throw e
     }
-    // Spark part-file names embed the job UUID so clashes with kept files
-    // are not expected — but a clash would silently drop a kept file in
-    // the swap, so check loudly
-    val stagedNames = fs.listStatus(staged)
-      .map(_.getPath.getName).filter(_.endsWith(".parquet")).toSet
-    val clash = untouched.map(_._1).filter(stagedNames.contains)
-    require(clash.isEmpty, s"staged rewrite produced colliding file names: $clash")
-    onStagedForTest()
-    val (rebased, resolvedNext) =
-      try occResolve(occExpected, staged, op, rebaseBaseFiles)
-      catch {
-        case e: Throwable =>
-          try changeStage.foreach(discardChanges)
-          catch { case r: Throwable => e.addSuppressed(r) }
-          throw e
-      }
-    require(!rebased.exists(stagedNames.contains),
-      s"staged rewrite collides with concurrently appended files: " +
-        rebased.filter(stagedNames.contains).mkString(", "))
-    onResolvedForTest()
-    // the stats dir rides the swap too: untouched files return to their
-    // exact original paths, so their stats rows stay valid and skipping
-    // keeps working after a selective rewrite (rows for replaced files
-    // become harmless orphans — lookups are keyed by files that exist;
-    // the replacement files simply have no stats until collectStats).
-    // A FULL rewrite deliberately does not do this: every file changes.
-    // the DV dir rides the swap like the stats dir: untouched files keep
-    // their exact paths, so their vectors stay valid; vectors for the
-    // replaced files become harmless orphans (no new file can reuse a
-    // UUID-suffixed name)
-    // a FULL maintenance rewrite (keepSideDirs = false) replaces every
-    // pre-existing file, so stats and deletion vectors would be 100%
-    // orphans — drop the dirs instead of carrying dead weight (rebased
-    // appends never have either); selective rewrites keep them because
-    // the untouched files' rows stay valid
-    // the pending op carries the change-stage claim and a swap uuid: a
-    // recovery completing this stage then attributes the op WITH its
-    // change set (the set publishes at the recovered version instead of
-    // aging out unclaimed — silent CDC starvation), and the live writer
-    // racing that recovery adopts the attribution by uuid
-    val swapId = java.util.UUID.randomUUID().toString.take(12)
-    val taggedParams = params ++
-      changeStage.map(LakeTable.ChangeStageParam -> _) +
-      (LakeTable.SwapStageParam -> swapId)
-    writeManifest(staged,
-      (untouched.map(_._1) ++ rebased) ++
-        (if (keepSideDirs) Seq(LakeTable.StatsDirName, LakeTable.DvDirName)
-         else Seq.empty),
-      op, taggedParams,
-      // the snapshot's complete file accounting: replaced originals die
-      // with the old dir, everything else rides the manifest — any file
-      // NOT here at delete time is a concurrent append completeSwap
-      // sweeps through (see the sweep comment there)
-      known = affected.map(_._1) ++ untouched.map(_._1) ++ rebased)
-    onSwapMarkedForTest()
-    // same-process completion: commit inline below
-    val (_, sweptLate) = completeSwap(staged)
-    // post-swap audit (closing the lost-append window the rebase opened):
-    // a commit landing AFTER occResolve's file listing rode the moved log
-    // (completeSwap moves the log LAST, so it is visible here) and its
-    // data files rode the late-append sweep. A MAINTENANCE rewrite
-    // composes with pure appends exactly as the pre-swap rebase does —
-    // proceed and record the sweep. Anything else (a non-append
-    // interloper, or a content-deriving op like MERGE whose result
-    // cannot absorb unseen commits) still refuses to stack its commit on
-    // top of the interleaving. (The truly-residual window — a commit
-    // after the log itself moved — recreates a log dir the delete
-    // removes entirely, record and all: undetectable, metadata-only,
-    // documented.)
-    val postSwapNext = CommitLog.nextVersion(fs, logDir)
-    if (postSwapNext != resolvedNext) {
-      val late = CommitLog.recordsSince(fs, logDir, resolvedNext)
-      // a RECOVERED commit with OUR swap uuid is a concurrent recovery
-      // attributing this very op — commitIfAbsent below adopts it; a
-      // VACUUM DEBRIS commit is metadata-only (the recovery twin's own
-      // bookkeeping); anything else follows the pre-existing contract
-      // (pure appends compose, the rest refuses)
-      val others = late
-        .filterNot(_.params.get(LakeTable.SwapStageParam).contains(swapId))
-        .filterNot(_.operation == "VACUUM DEBRIS")
-      val nonAppend = others.filterNot(isPureAppend)
-      if (nonAppend.nonEmpty || (others.nonEmpty && rebaseBaseFiles.isEmpty))
-        throw new java.util.ConcurrentModificationException(
-          s"$op at $path: commit(s) v$resolvedNext..v${postSwapNext - 1} landed " +
-            "while the swap was in flight (their data files were carried " +
-            "through it where present). This operation's commit was NOT " +
-            "recorded — reconcile from history or RESTORE a pre-swap version.")
-    }
-    // adopt-or-commit is exactly-once THROUGH the log, not check-then-
-    // act: a recovery twin between its completeSwap and its RECOVERED
-    // commit is invisible to any snapshot read here, so the decision is
-    // made by commitIfAbsent's scan-then-claim-exactly-v loop instead
-    val actual = commitIfAbsent(
-      op, taggedParams ++
-        Map("filesRewritten" -> affected.size.toString,
-          "filesKept" -> untouched.size.toString) ++
-        (if (rebased.nonEmpty) Map("filesRebased" -> rebased.size.toString)
-         else Map.empty) ++
-        (if (sweptLate > 0) Map("filesSweptLate" -> sweptLate.toString)
-         else Map.empty),
-      LakeTable.SwapStageParam, swapId, resolvedNext)
-    changeStage.foreach(publishChanges(_, actual))
+    releaseStage()
     this
   }
 
@@ -1967,8 +1951,9 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * the table — [[compact]] rewrites everything, every time.
     *
     * Sizing reads only filesystem metadata. No-op (no commit) when
-    * fewer than two small files exist. Falls back to nothing on a
-    * partitioned layout — compact those per partition via
+    * fewer than two small files exist. Refused on a Hive-partitioned
+    * layout (the kept files would ride the swap inside partition dirs) —
+    * compact those whole with [[compact]] or per partition with
     * [[optimizeWhere]].
     */
   def compactSmall(
@@ -1980,7 +1965,7 @@ final class LakeTable(spark: SparkSession, val path: String) {
     // full compact reads through the manifest and detaches the clone
     if (isShallowClone) return compact(targetFileBytes)
     // base version before the listing — see maintenanceRewrite
-    val occBase = Some(CommitLog.nextVersion(fs, logDir))
+    val occBase = CommitLog.nextVersion(fs, logDir)
     val all = listDataFiles()
     require(!all.exists(_._1.contains("/")),
       s"$path has a partitioned layout; compact per partition via optimizeWhere")
@@ -1996,12 +1981,11 @@ final class LakeTable(spark: SparkSession, val path: String) {
       // refreshes stats bookkeeping the standard way
       compact(targetFileBytes)
     else
-      swapSelective(affected, untouched, _.repartition(n),
-        "COMPACT SMALL",
+      stagedSwap(Some(readFiles(affected).repartition(n)), "COMPACT SMALL",
         Map("minFileBytes" -> minFileBytes.toString,
           "targetFileBytes" -> targetFileBytes.toString),
-        changeStage = None, alwaysTransform = false, occBase = occBase,
-        rebaseBaseFiles = Some(all.map(_._1).toSet))
+        occBase, replaced = Some(affected), untouched = untouched,
+        rebase = true, partitionCols = Some(Nil))
   }
 
   /** Materialize a change set in a STAGING dir under `_graft_changes/`
@@ -2431,8 +2415,9 @@ final class LakeTable(spark: SparkSession, val path: String) {
     */
   def materialize(): LakeTable = {
     if (!isShallowClone) return this
-    rewrite(read, "MATERIALIZE",
-      Map("sourceFiles" -> cloneManifestFiles.size.toString))
+    val occBase = CommitLog.nextVersion(fs, logDir)
+    stagedSwap(Some(read), "MATERIALIZE",
+      Map("sourceFiles" -> cloneManifestFiles.size.toString), occBase)
   }
 
   /** Delta MERGE rejects multiple source rows per key; writing them would
@@ -2963,7 +2948,7 @@ final class LakeTable(spark: SparkSession, val path: String) {
     // would read the "ALWAYS generated" column as null). The version-
     // gated rewrite refuses instead — the DDL-vs-writer contract
     // ConstraintRaceSpec pins for constraints, applied to backfills.
-    val occBase = Some(CommitLog.nextVersion(fs, logDir))
+    val occBase = CommitLog.nextVersion(fs, logDir)
     read.limit(0).select(expr(exprSql)).collect(): Unit // reference check
     val computed = expr(exprSql).cast(dataType).as(name)
     if (listDataFiles().nonEmpty || isShallowClone) {
@@ -2973,10 +2958,9 @@ final class LakeTable(spark: SparkSession, val path: String) {
       // writer can ever observe the column in the schema without the
       // declaration (it would silently null-fill instead of computing),
       // and a crash on either side of the swap stays consistent.
-      rewrite(read.withColumn(name, computed), "ADD GENERATED COLUMN",
-        Map("column" -> name, "expr" -> exprSql), occBase = occBase,
-        onStagedLog = stagedLog =>
-          saveGeneratedAt(stagedLog, gens + (name -> exprSql))): Unit
+      stagedSwap(Some(read.withColumn(name, computed)), "ADD GENERATED COLUMN",
+        Map("column" -> name, "expr" -> exprSql), occBase,
+        onStagedLog = Some((log: Path) => saveGeneratedAt(log, gens + (name -> exprSql)))): Unit
     } else {
       saveSchema(StructType(schema.fields :+
         StructField(name, dataType, nullable = true)))
@@ -3118,16 +3102,15 @@ final class LakeTable(spark: SparkSession, val path: String) {
       // backfill would keep NULL identity forever), and the declaration
       // rides the staged log so column-in-schema and identity-spec flip
       // atomically with the backfilled values
-      val occBase = Some(CommitLog.nextVersion(fs, logDir))
+      val occBase = CommitLog.nextVersion(fs, logDir)
       val withNull = read.withColumn(name, lit(null).cast(longT))
       val (backfilled, counts) =
         assignIdentityRows(withNull, Seq((name, start, step)), Map(name -> start))
-      rewrite(backfilled, "ADD IDENTITY COLUMN",
+      stagedSwap(Some(backfilled), "ADD IDENTITY COLUMN",
         Map("column" -> name, "start" -> start.toString, "step" -> step.toString,
           LakeTable.IdentityHwmParamPrefix + name ->
-            (start + step * counts(name)).toString), occBase = occBase,
-        onStagedLog = stagedLog =>
-          saveIdentityAt(stagedLog, specs + (name -> (start, step)))): Unit
+            (start + step * counts(name)).toString), occBase,
+        onStagedLog = Some((log: Path) => saveIdentityAt(log, specs + (name -> (start, step))))): Unit
     } else {
       saveSchema(StructType(schema.fields :+
         StructField(name, longT, nullable = true)))
@@ -3502,11 +3485,12 @@ final class LakeTable(spark: SparkSession, val path: String) {
     // deleted inside the STAGED log dir after the point of no return):
     // data files and mapping metadata flip together — a crash on either
     // side of the swap leaves a consistent table
-    rewrite(read, "REORG PURGE",
-      Map("droppedPhysicals" -> retired.toSeq.sorted.mkString(",")),
+    val occBase = CommitLog.nextVersion(fs, logDir)
+    stagedSwap(Some(read), "REORG PURGE",
+      Map("droppedPhysicals" -> retired.toSeq.sorted.mkString(",")), occBase,
       plainNames = true,
-      onStagedLog = stagedLog =>
-        fs.delete(new Path(stagedLog, LakeTable.ColMapFileName), false): Unit)
+      onStagedLog = Some((log: Path) =>
+        fs.delete(new Path(log, LakeTable.ColMapFileName), false): Unit))
   }
 
   /** Fresh unique physical name for a NEW logical column whose name
@@ -4015,9 +3999,9 @@ final class LakeTable(spark: SparkSession, val path: String) {
       readManifest(manifest).foreach(n => moveIn(new Path(path, n), n))
       // the log moves LAST among the gathered dirs: every commit that
       // lands while the (possibly long) data-file moves above run still
-      // reaches the REAL log dir and rides into the stage —
-      // swapSelective's post-swap audit can then see it and refuse to
-      // commit on top of a lost append.
+      // reaches the REAL log dir and rides into the stage — stagedSwap's
+      // post-swap audit can then see it and refuse to commit on top of a
+      // lost append (a swap with an onStagedLog edit moved it already).
       moveIn(logDir, LakeTable.LogDirName)
       // late-append sweep: any table-dir parquet file the snapshot did
       // NOT account for (absent from the known-set) landed concurrently
@@ -4025,9 +4009,9 @@ final class LakeTable(spark: SparkSession, val path: String) {
       // a rebased file instead of deleting it with the old children; its
       // commit either already rode the moved log (the audit sees it and
       // knows the data survived) or will land in the live log after the
-      // swap. Stages without a known-set delete unaccounted files with
-      // the clear phase (the full-rewrite contract — the audit refuses
-      // to stack a commit on the interleaving either way).
+      // swap. A stage without a known set (left on disk by a build that
+      // wrote none for full replacements) deletes unaccounted files with
+      // the clear phase — its audit refused any interleaving either way.
       val knownFile = new Path(staged, LakeTable.KnownFilesName)
       val knownSet: Option[Set[String]] =
         if (f.exists(knownFile)) Some(readManifest(knownFile).toSet) else None
@@ -4073,10 +4057,9 @@ final class LakeTable(spark: SparkSession, val path: String) {
           // four-file append batch). Unaccounted files simply stay in
           // the table dir through the swap — place() only ADDS files
           // (uuid part names cannot collide), so surviving in place is
-          // equivalent to being swept through. Full-rewrite stages (no
-          // known set) keep the delete-everything contract: their
-          // post-swap audit refuses to commit over ANY interloper and
-          // directs reconciliation instead.
+          // equivalent to being swept through. A stage with no known set
+          // (an older build's full replacement) keeps the
+          // delete-everything contract.
           .filterNot { n =>
             knownSet.isDefined && n.endsWith(".parquet") &&
               !knownSet.get.contains(n)
@@ -4282,8 +4265,7 @@ final class LakeTable(spark: SparkSession, val path: String) {
 
   private def writeManifest(
       staged: Path, untouched: Seq[String],
-      op: String, params: Map[String, String],
-      known: Seq[String] = Seq.empty): Unit = {
+      op: String, params: Map[String, String]): Unit = {
     // Every marker is published ATOMICALLY (tmp + windowless rename,
     // LakeIo): a real SIGKILL can land between a plain create and its
     // flush/close, leaving a marker that EXISTS but is empty — recovery
@@ -4300,14 +4282,6 @@ final class LakeTable(spark: SparkSession, val path: String) {
       }
     LakeIo.atomicOverwrite(fs, new Path(staged, LakeTable.PendingOpFileName),
       lines.mkString("\n"))
-    // the KNOWN-set (every data file the op's snapshot accounted for):
-    // completeSwap preserves any table-dir parquet file NOT listed here —
-    // a concurrent append landing mid-swap — instead of deleting it with
-    // the old dir. Written before the manifest so a marked stage is
-    // always sweep-capable.
-    if (known.nonEmpty)
-      LakeIo.atomicOverwrite(fs, new Path(staged, LakeTable.KnownFilesName),
-        known.mkString("\n"))
     LakeIo.atomicOverwrite(fs, new Path(staged, LakeTable.SwapManifestName),
       untouched.mkString("\n"))
   }
@@ -4367,31 +4341,29 @@ final class LakeTable(spark: SparkSession, val path: String) {
   }
 
   /** Shared shape of every content-preserving reorganization (compact /
-    * the three optimize curves): pin the input to the file list captured
-    * at entry (the rewrite is a pure function of exactly those files),
-    * stage, and swap with OCC RESOLUTION — a version race lost only to
-    * pure appends rebases (the appended files ride the manifest through
-    * untouched, see [[occResolve]]) instead of failing. Shallow clones
-    * (referenced files aren't locally listable) and Hive-partitioned
-    * layouts fall back to the strict whole-table [[rewrite]], which keeps
-    * the partition layout.
+    * the three optimize curves): one [[stagedSwap]] of the file list
+    * captured at entry, in the table's own layout. On a flat layout the
+    * staged input is pinned to exactly those files (the rewrite is a
+    * pure function of them), so a version race lost only to pure appends
+    * REBASES (the appended files ride the manifest through untouched,
+    * see [[occResolve]]) instead of failing. A shallow clone (its
+    * referenced files aren't locally listable) or a Hive-partitioned
+    * layout (rebased files would ride inside partition dirs) reads the
+    * whole table and refuses any interloper.
     */
   private def maintenanceRewrite(
       op: String, params: Map[String, String],
       transform: DataFrame => DataFrame): LakeTable = {
     val parts = partitionColumns()
-    if (isShallowClone || parts.nonEmpty)
-      return rewrite(transform(read), op, params, partitionCols = parts)
+    val rebase = parts.isEmpty && !isShallowClone
     // base version BEFORE the listing: a commit landing between the two
     // shows up as an interloper AND its files as rebase candidates —
     // never silently dropped, never double-counted (the staged input
     // reads exactly the listed files, not a re-listing)
-    val occBase = Some(CommitLog.nextVersion(fs, logDir))
+    val occBase = CommitLog.nextVersion(fs, logDir)
     val base = listDataFiles()
-    swapSelective(base, Seq.empty, transform, op, params,
-      changeStage = None, alwaysTransform = true, occBase = occBase,
-      rebaseBaseFiles = Some(base.map(_._1).toSet),
-      keepSideDirs = false)
+    stagedSwap(Some(transform(if (rebase) readFiles(base) else read)), op, params,
+      occBase, replaced = Some(base), rebase = rebase, partitionCols = Some(parts))
   }
 
   /** Size-targeted compaction: pick the output file count from the
@@ -4401,21 +4373,15 @@ final class LakeTable(spark: SparkSession, val path: String) {
     * thousands of KB-files whose per-file open/footer cost dominates a
     * scan; compaction to split-sized files restores full scan throughput.
     * Sizing reads only filesystem METADATA (O(files) driver-side listing,
-    * no data read) before the one distributed rewrite.
+    * no data read) before the one distributed rewrite. A Hive-partitioned
+    * table keeps its layout (the rewrite goes through
+    * [[maintenanceRewrite]], like [[optimize]]).
     */
   def compact(
       targetFileBytes: Long = 128L * 1024 * 1024,
       zorderBy: Seq[String] = Seq.empty): LakeTable = {
     require(targetFileBytes > 0, "targetFileBytes must be positive")
     val f = fs
-    // compact's rewrite flattens the directory layout — refuse on a
-    // Hive-partitioned table instead of silently collapsing it; those
-    // compact per-partition via overwritePartitions/optimize
-    val partitioned = f.listStatus(new Path(path))
-      .exists(st => st.isDirectory && st.getPath.getName.contains("="))
-    require(!partitioned,
-      s"$path has a Hive-partitioned layout; compact per partition " +
-        "(overwritePartitions) instead of flattening the table")
     // sizing walk: recurse only into DATA children (e.g. a versioned
     // layout's _v* snapshot dirs), never the metadata dirs — the log and
     // changes dirs hold another writer's churning `.tmp_*` publications,
@@ -4488,32 +4454,6 @@ final class LakeTable(spark: SparkSession, val path: String) {
         .drop(hCol))
   }
 
-  /** Optimistic-concurrency check (Delta's ConcurrentModificationException
-    * contract): a staged rewrite derives its output from the version it
-    * read; if another writer committed while the stage was being built,
-    * swapping it in would silently UNDO that commit (lost update). Called
-    * immediately before the swap's point of no return — a conflict
-    * deletes the stage and fails the LATER writer, whose caller retries
-    * against the new state. The residual window between this check and
-    * the log move is metadata-only (milliseconds against a staging write
-    * that took seconds-to-minutes); Delta closes it fully with its atomic
-    * log-commit protocol, this engine documents it instead.
-    */
-  private def occCheck(expected: Long, staged: Path, op: String): Unit = {
-    // deterministic-interleave seam: lets a spec land a concurrent
-    // commit exactly inside the pre-swap window this check guards
-    // (ConstraintRaceSpec's backfill races; self-resetting in OccSpec)
-    onResolvedForTest()
-    val now = CommitLog.nextVersion(fs, logDir)
-    if (now != expected) {
-      fs.delete(staged, true): Unit
-      throw new java.util.ConcurrentModificationException(
-        s"$op at $path conflicts with a concurrent commit: staged against " +
-          s"version ${expected - 1}, table is now at ${now - 1} — retry the " +
-          "operation against the current table state")
-    }
-  }
-
   /** A commit that only ADDED files — existing files (and the rows in
     * them) are untouched, so it cannot logically conflict with a
     * content-preserving reorganization of the pre-existing files.
@@ -4545,173 +4485,55 @@ final class LakeTable(spark: SparkSession, val path: String) {
     */
   private[sources] var onPartitionsPreCheckedForTest: () => Unit = () => ()
 
-  /** OCC with logical conflict RESOLUTION (Delta VLDB'20 §3.2): after
-    * losing the version race, re-read the interloping commits instead of
-    * failing outright. When the caller declared its staged output a
-    * content-preserving function of exactly `baseFiles` (compaction /
-    * clustering — never DML, whose read set is the whole table) and
-    * every interloper is a pure append, the commits are logically
-    * disjoint: the appended files (current listing minus base) are
-    * returned for the caller to pass through the swap manifest untouched,
-    * and both operations land. Anything else — a DML interloper, or an
-    * op that never declared its base — deletes the stage and fails the
-    * LATER writer, exactly the strict [[occCheck]] contract. At 100 TB
-    * this is what lets a compaction cadence coexist with streaming
-    * sinks instead of retry-storming against them.
+  /** Optimistic concurrency with logical conflict RESOLUTION (Delta's
+    * ConcurrentModificationException contract, VLDB'20 §3.2): a staged
+    * replacement derives its output from the version `expected` its
+    * caller read; if another writer committed since, swapping it in
+    * could silently UNDO that commit (lost update). Called immediately
+    * before the swap's point of no return.
     *
-    * Returns (rebase set, log version AT the rebase listing) — the
-    * caller re-reads the version after its swap and refuses to commit if
-    * anything landed in between: an append whose files arrive after this
-    * listing but before the swap's table-dir delete would lose its data
-    * while its commit record rides the moved log (see
-    * [[swapSelective]]'s post-swap audit).
+    * When the caller declared its staged output a content-preserving
+    * function of exactly `baseFiles` (compaction / clustering — never
+    * DML, whose read set is the whole table) and every interloper is a
+    * pure append, the commits are logically disjoint: the appended files
+    * (current listing minus base) are returned for the caller to pass
+    * through the swap manifest untouched, and both operations land. At
+    * 100 TB this is what lets a compaction cadence coexist with
+    * streaming sinks instead of retry-storming against them. Anything
+    * else — a DML interloper, or an op that declared no base — fails the
+    * LATER writer, whose caller retries against the new state.
+    *
+    * The version is read AFTER the rebase listing, as late as possible:
+    * an append landing between the two is accounted by the swap's
+    * late-append sweep. Returns (rebase set, log version at that read) —
+    * the caller re-reads the version after its swap and refuses to
+    * commit on top of anything that landed in between (the residual,
+    * metadata-only window Delta closes with its atomic log commit).
     */
   private def occResolve(
-      expected: Long, staged: Path, op: String,
-      baseFiles: Option[Set[String]]): (Seq[String], Long) = {
+      expected: Long, op: String, baseFiles: Option[Set[String]]): (Seq[String], Long) = {
+    // the rebase set: files on disk that the stage did not derive from.
+    // Pure appends never remove files, so base - current = empty and
+    // current - base = exactly the concurrent additions
+    val rebased = baseFiles match {
+      case Some(base) if CommitLog.nextVersion(fs, logDir) != expected =>
+        listDataFiles().map(_._1).filterNot(base.contains).sorted
+      case _ => Nil
+    }
+    // deterministic-interleave seam: a commit landed here is seen by the
+    // version check below, but not by the rebase listing above
+    onResolvedForTest()
     val now = CommitLog.nextVersion(fs, logDir)
-    if (now == expected) return (Nil, now)
-    val compatible = baseFiles.isDefined && {
+    val compatible = now == expected || baseFiles.isDefined && {
       val interlopers = CommitLog.recordsSince(fs, logDir, expected)
       interlopers.nonEmpty && interlopers.forall(isPureAppend)
     }
-    if (!compatible) occCheck(expected, staged, op) // deletes stage + throws
-    // the rebase set: files on disk now that the stage did not derive
-    // from. Pure appends never remove files, so base - current = empty
-    // and current - base = exactly the concurrent additions.
-    (listDataFiles().map(_._1).filterNot(baseFiles.get.contains).sorted, now)
-  }
-
-  /** Stage the clustered rewrite to a sibling dir, then swap — avoids
-    * reading+overwriting the same location in one job, and never deletes
-    * the live table in place: the manifest marks the point of no return,
-    * the log rides through the stage, and [[completeSwap]] (or its crash
-    * recovery) places the new files. Carries every full replacement:
-    * MERGE, SCD2, backfills, maintenance fallbacks, and every non-append
-    * [[write]]/[[writePartitioned]].
-    *
-    * @param partitionCols physical columns the staged files are
-    *                      Hive-partitioned by (empty: flat layout)
-    * @param replaceSchema take `clustered`'s schema verbatim instead of
-    *                      merging it with the stored one (overwriteSchema)
-    * @param extraChecks   checks validated with the table's constraints
-    *                      against the staged files (generated columns)
-    */
-  private[sources] def rewrite(
-      clustered: DataFrame, op: String, params: Map[String, String],
-      onAbort: () => Unit = () => (),
-      onCommit: Long => Unit = _ => (),
-      occBase: Option[Long] = None,
-      plainNames: Boolean = false,
-      onStagedLog: Path => Unit = _ => (),
-      partitionCols: Seq[String] = Seq.empty,
-      replaceSchema: Boolean = false,
-      extraChecks: Map[String, String] = Map.empty): LakeTable = {
-    claimStage(op)
-    try rewriteClaimed(clustered, op, params, onAbort, onCommit, occBase,
-      plainNames, onStagedLog, partitionCols, replaceSchema, extraChecks)
-    finally releaseStage()
-  }
-
-  private def rewriteClaimed(
-      clustered: DataFrame, op: String, params: Map[String, String],
-      onAbort: () => Unit,
-      onCommit: Long => Unit,
-      occBase: Option[Long],
-      plainNames: Boolean,
-      onStagedLog: Path => Unit,
-      partitionCols: Seq[String],
-      replaceSchema: Boolean,
-      extraChecks: Map[String, String]): LakeTable = {
-    val staged = s"$path${LakeTable.StageSuffix}"
-    // optimistic concurrency (Delta's OCC contract): the version this
-    // rewrite derives from — passed down by DML callers that captured
-    // it BEFORE their snapshot read and any change-feed job (a commit
-    // landing during those must conflict too), captured here for
-    // maintenance ops whose read happens at call time. Re-checked just
-    // before the swap's point of no return by occCheck below.
-    val occExpected = occBase.getOrElse(CommitLog.nextVersion(fs, logDir))
-    // onAbort fires ONLY for pre-swap failures (table untouched); once
-    // the swap has happened the caller's side effects must stand
-    try {
-      val written = if (plainNames) clustered else toPhysical(clustered)
-      val w = written.write.mode(SaveMode.Overwrite)
-      (if (partitionCols.isEmpty) w else w.partitionBy(partitionCols: _*))
-        .parquet(staged)
-      // constraints validate the STAGED files (nothing recomputed); a
-      // violating merge/optimize aborts before the swap, table untouched.
-      // Read with the written schema: an empty output stages no parquet
-      // file to infer one from (TRUNCATE of a constrained table)
-      val cons = constraints ++ extraChecks
-      if (cons.nonEmpty) {
-        val stagedRaw = spark.read.schema(written.schema).parquet(staged)
-        val stagedView = if (plainNames) stagedRaw else logicalView(stagedRaw)
-        try enforceConstraints(stagedView, cons)
-        catch { case e: Throwable => fs.delete(new Path(staged), true); throw e }
-      }
-      occCheck(occExpected, new Path(staged), op)
-    } catch {
-      case e: Throwable =>
-        try onAbort()
-        catch { case r: Throwable => e.addSuppressed(r) }
-        throw e
-    }
-    val s = new Path(staged)
-    val f = fs
-    // the manifest is the swap's point-of-no-return marker: once present,
-    // a crash anywhere below is COMPLETED (not discarded) by vacuumDebris
-    // — without it, a crash after the log moves would see the log deleted
-    // with the "orphaned" stage. The swap uuid makes the attribution
-    // idempotent when a live recovery (vacuumDebris racing this writer)
-    // completes-and-commits the same stage first.
-    val swapId = java.util.UUID.randomUUID().toString.take(12)
-    val taggedParams = params + (LakeTable.SwapStageParam -> swapId)
-    writeManifest(s, Seq.empty, op, taggedParams)
-    onSwapMarkedForTest()
-    // keep the log: move it into the staged dir before the swap
-    if (f.exists(logDir)) f.rename(logDir, new Path(s, LakeTable.LogDirName))
-    // metadata mutations that must flip ATOMICALLY with the data files
-    // edit the staged log here, after the point of no return — the swap
-    // (or its crash recovery) applies both together (see reorgPurge)
-    onStagedLog(new Path(s, LakeTable.LogDirName))
-    // child-wise swap: old children cleared, staged children placed, the
-    // change feed NEVER moves (its files keep their paths through the
-    // whole swap — the CDC-stream survival contract; see completeSwap)
-    completeSwap(s): Unit
-    // post-swap audit, mirroring swapSelective's: a commit that landed
-    // between the occCheck and the log move rode into the stage but its
-    // data files died with the old table dir — refuse to stack this
-    // op's commit on top of a lost update. A RECOVERED commit carrying
-    // THIS swap's uuid is not an interloper: it is a concurrent recovery
-    // (vacuumDebris racing us) attributing our own op — adopt it.
-    val postSwapNext = CommitLog.nextVersion(fs, logDir)
-    val late =
-      if (postSwapNext == occExpected) Nil
-      else CommitLog.recordsSince(fs, logDir, occExpected)
-    // VACUUM DEBRIS is metadata-only (it completes/reclaims, never adds
-    // data of its own) — a concurrent vacuum racing this swap as the
-    // recovery twin must not read as a lost update
-    val foreign = late
-      .filterNot(_.params.get(LakeTable.SwapStageParam).contains(swapId))
-      .filterNot(_.operation == "VACUUM DEBRIS")
-    if (foreign.nonEmpty)
+    if (!compatible)
       throw new java.util.ConcurrentModificationException(
-        s"$op at $path: commit(s) v$occExpected..v${postSwapNext - 1} landed " +
-          "while the swap was in flight; their data files were not carried " +
-          "through it. This operation's commit was NOT recorded — reconcile " +
-          "from history: re-apply the listed commits' writes, or RESTORE a " +
-          "pre-swap version.")
-    // the rewritten frame IS the table now — keep the authoritative
-    // schema in lockstep so stored-schema reads match the new files
-    // (upsert casts to the table types, so this is a no-op for MERGE;
-    // for optimize it refreshes nullability after the clustered rewrite)
-    saveSchema(clustered.schema, replace = replaceSchema)
-    // exactly-once through the log (see the swapSelective site): a
-    // recovery twin mid-attribution is invisible to a snapshot read, so
-    // adopt-or-commit runs inside commitIfAbsent's claim loop
-    onCommit(commitIfAbsent(
-      op, taggedParams, LakeTable.SwapStageParam, swapId, occExpected))
-    this
+        s"$op at $path conflicts with a concurrent commit: staged against " +
+          s"version ${expected - 1}, table is now at ${now - 1} — retry the " +
+          "operation against the current table state")
+    (rebased, now)
   }
 
   /** Record per-file min/max/null-count stats for `cols` under
@@ -4722,11 +4544,13 @@ final class LakeTable(spark: SparkSession, val path: String) {
     *
     * Staleness is handled structurally, not by invalidation bookkeeping:
     * stats are keyed by file path and parquet files are immutable, so a
-    * stats row is valid exactly as long as its file exists. Overwrites
-    * and rewrites replace the table directory (stats dir included — it
-    * is not preserved, BY DESIGN: the files it described are gone);
-    * appended files simply have no stats row and are never pruned until
-    * the next [[collectStats]] or (cheaper) [[refreshStats]].
+    * stats row is valid exactly as long as its file exists. A swap that
+    * replaces every file (an Overwrite, stats-less DML, maintenance)
+    * drops the stats dir with the old files, BY DESIGN: the files it
+    * described are gone. A selective swap carries it through beside the
+    * untouched files, whose rows stay valid; rewritten and appended
+    * files simply have no stats row and are never pruned until the next
+    * [[collectStats]] or (cheaper) [[refreshStats]].
     *
     * @param bloomFor  columns additionally getting a PER-FILE bloom
     *                  filter — Delta's bloom filter index analogue,

@@ -248,9 +248,12 @@ object Scd {
       tracked: Seq[String],
       effectiveCol: String = "effective_date",
       extraParams: Map[String, String] = Map.empty): LakeTable = {
+    // OCC base before the read: a commit landing meanwhile refuses the swap
+    val occBase = lake.currentVersion + 1
     val next = applyType2(lake.read, updates, keys, tracked, effectiveCol)
-    // staged rewrite, not write(Overwrite): the plan READS the table it
+    // staged swap, not write(Overwrite): the plan READS the table it
     // replaces, so the new state must land beside the old and swap in
-    lake.rewrite(next, "SCD2", Map("keys" -> keys.mkString(",")) ++ extraParams)
+    lake.stagedSwap(Some(next), "SCD2",
+      Map("keys" -> keys.mkString(",")) ++ extraParams, occBase)
   }
 }

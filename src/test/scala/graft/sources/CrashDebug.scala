@@ -9,7 +9,8 @@ import graft.core.GraftSession
 /** Ad-hoc reproducer for CrashInjectionSpec failures — prints the
   * directory tree and read state around one fuse position.
   * Usage: Test/runMain graft.sources.CrashDebug <scenario> <fuse>, where
-  * scenario is upsert (the default), compact or overwrite.
+  * scenario is upsert (the default), compact, overwrite or selective (a
+  * change-feed delete that rewrites one statted file and keeps the rest).
   */
 object CrashDebug {
   def main(args: Array[String]): Unit = {
@@ -22,10 +23,11 @@ object CrashDebug {
     val dir = Files.createTempDirectory("graft_crashdbg").toString + "/t"
     val lake = LakeTable(spark, dir)
     lake.write(Seq((0L, "a"), (1L, "a"), (2L, "a")).toDF("id", "v").coalesce(1))
-    if (scenario == "compact" || scenario == "overwrite")
+    if (scenario == "compact" || scenario == "overwrite" || scenario == "selective")
       (0 until 3).foreach { i =>
         lake.write(Seq((3L + i, "s")).toDF("id", "v").coalesce(1), SaveMode.Append): Unit
       }
+    if (scenario == "selective") lake.collectStats(Seq("id")): Unit
     if (scenario == "overwrite") {
       lake.upsert(Seq((1L, "u")).toDF("id", "v"), Seq("id"), changeFeed = true): Unit
       lake.addConstraint("id_nonneg", "id >= 0"): Unit
@@ -52,6 +54,8 @@ object CrashDebug {
         case "compact" => lake.compactSmall(1L << 30, 1L << 30): Unit
         case "overwrite" => lake.write(Seq((20L, "o"), (21L, "o")).toDF("id", "v")
           .coalesce(1), SaveMode.Overwrite): Unit
+        case "selective" =>
+          lake.delete(org.apache.spark.sql.functions.col("id") === 1L, changeFeed = true): Unit
         case _ => lake.upsert(Seq((1L, "u"), (5L, "n")).toDF("id", "v"),
           Seq("id"), changeFeed = true): Unit
       }

@@ -134,19 +134,27 @@ class CrashInjectionSpec extends SparkSpec {
 
   /** Walk every fuse position for `op` against a fresh copy of the
     * `template` table; returns the number of crash points exercised.
+    * `at` runs every position at that one path instead (its parent dir
+    * emptied and the template copied back each time), for table state
+    * that records absolute file paths: file stats. `onCompleted`
+    * inspects the table the uncrashed (completing) run left.
     */
   private def crashWalk(
       name: String, template: String,
       op: LakeTable => Unit,
       post: Seq[(Long, String)],
-      replayConverges: Boolean): Int = {
+      replayConverges: Boolean,
+      at: Option[String] = None,
+      onCompleted: LakeTable => Unit = _ => ()): Int = {
     val pre = rows(template)
     val preCommits = LakeTable(spark, template).history.count()
     val preMeta = metadata(template)
     var fuse = 0
     var completed = false
     while (!completed && fuse < MaxFusePositions) {
-      val dir = Files.createTempDirectory(s"graft_crash_$name").toString + "/t"
+      val dir = at.getOrElse(Files.createTempDirectory(s"graft_crash_$name").toString + "/t")
+      if (at.isDefined)
+        org.apache.commons.io.FileUtils.cleanDirectory(new java.io.File(dir).getParentFile)
       copyDir(template, dir)
       val lake = LakeTable(spark, dir)
       LakeTable.fsDecoratorForTest = _ => newFaultFs()
@@ -156,8 +164,10 @@ class CrashInjectionSpec extends SparkSpec {
       val fired = FsFuse.fired
       FsFuse.disarm()
       LakeTable.fsDecoratorForTest = identity(_)
-      if (outcome.isEmpty && !fired) completed = true
-      else {
+      if (outcome.isEmpty && !fired) {
+        completed = true
+        onCompleted(LakeTable(spark, dir))
+      } else {
         assert(fired,
           s"$name fuse=$fuse: op failed without the fuse firing: ${outcome.get}")
         // ---- convergence contract after the simulated crash ----
@@ -291,6 +301,31 @@ class CrashInjectionSpec extends SparkSpec {
       post = overwriteRows.sorted,
       replayConverges = true)
     assert(n >= 8, s"partitioned overwrite walk exercised only $n crash points")
+  }
+
+  test("selective CDC delete (kept files ride the manifest) converges from a crash at every metadata fs operation") {
+    // three files with stats on id: the delete rewrites the one file
+    // whose range admits id = 1 while the other two move through the
+    // swap untouched, and its change set publishes at the commit. The
+    // stats name files by absolute path, so the walk runs at the path
+    // they were collected at, restored from a pristine copy
+    val home = freshTemplate("seldelete", smallAppends = 2)
+    LakeTable(spark, home).collectStats(Seq("id")): Unit
+    val tpl = Files.createTempDirectory("graft_crashtpl_seldelete_copy").toString + "/t"
+    copyDir(home, tpl)
+    val pre = rows(tpl)
+    val n = crashWalk("seldelete", tpl,
+      l => l.delete(col("id") === 1L, changeFeed = true): Unit,
+      post = pre.filterNot(_._1 == 1L),
+      replayConverges = true,
+      at = Some(home),
+      onCompleted = done => {
+        val kept = done.history.where(col("operation") === "DELETE")
+          .select("operationParameters.filesKept").as[String].collect().toSeq
+        assert(kept.nonEmpty && kept.forall(k => k != null && k.toInt > 0),
+          s"the delete took the full replacement (filesKept = $kept), not the selective swap")
+      })
+    assert(n >= 8, s"selective delete walk exercised only $n crash points")
   }
 
   test("compactSmall (maintenance swap) converges from a crash at every metadata fs operation") {

@@ -754,6 +754,34 @@ class LakeTableSpec extends SparkSpec {
       lake.update(Map("nope" -> lit(1)), lit(true)))
   }
 
+  test("upsert, delete, update and merge keep a Hive-partitioned layout") {
+    val s = spark
+    import s.implicits._
+    val path = tmp()
+    val lake = LakeTable(spark, path).writePartitioned(
+      Seq((1L, "a", 1.0), (2L, "a", 2.0), (3L, "b", 3.0), (4L, "b", 4.0))
+        .toDF("id", "p", "x").coalesce(1), Seq("p"))
+    def rows: Seq[(Long, String, Double)] =
+      lake.read.select("id", "p", "x").as[(Long, String, Double)].collect().sorted.toSeq
+    def layoutKept(): Unit = {
+      assert(lake.partitionColumns() === Seq("p"))
+      assert(!new java.io.File(path).listFiles().exists(_.getName.endsWith(".parquet")),
+        "data files landed beside the partition dirs")
+    }
+    lake.upsert(Seq((2L, "a", 20.0), (5L, "b", 5.0)).toDF("id", "p", "x"), Seq("id"))
+    layoutKept()
+    lake.delete(col("id") === 1L)
+    layoutKept()
+    lake.update(Map("x" -> (col("x") + 100.0)), col("p") === "b", changeFeed = true)
+    layoutKept()
+    lake.merge(Seq((3L, "b", 0.0), (6L, "a", 6.0)).toDF("id", "p", "x"), Seq("id"),
+      Seq(MergeClause.DeleteWhen()))
+    layoutKept()
+    assert(rows === Seq((2L, "a", 20.0), (4L, "b", 104.0), (5L, "b", 105.0), (6L, "a", 6.0)))
+    assert(lake.readChanges().where(col("_change_type") === "update_postimage")
+      .select("id").as[Long].collect().sorted.toSeq === Seq(3L, 4L, 5L))
+  }
+
   test("dynamic partition overwrite replaces only the touched partition") {
     val o = Tables(spark, sf0001).orders
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))

@@ -331,6 +331,64 @@ class OccSpec extends SparkSpec {
     assert(lake.history.where(col("operation") === "OPTIMIZE WHERE").count() === 2)
   }
 
+  test("a full replacement racing an append keeps the appended file and refuses its own commit") {
+    val root = Files.createTempDirectory("graft_occ_known").toString
+    val path = s"$root/t"
+    val lake = LakeTable(spark, path)
+      .write(Seq((1L, 1.0), (2L, 2.0)).toDF("id", "x").coalesce(1))
+    // the append lands after the overwrite's OCC check, once its stage
+    // is marked: the known-file set tells the swap it is not one of the
+    // files the overwrite replaces
+    lake.onSwapMarkedForTest = () => {
+      lake.onSwapMarkedForTest = () => ()
+      LakeTable(spark, path)
+        .write(Seq((3L, 3.0)).toDF("id", "x").coalesce(1), SaveMode.Append): Unit
+    }
+    val e = intercept[java.util.ConcurrentModificationException] {
+      lake.write(Seq((9L, 9.0)).toDF("id", "x").coalesce(1), SaveMode.Overwrite)
+    }
+    assert(e.getMessage.contains("NOT recorded"), e.getMessage)
+    assert(lake.read.orderBy("id").as[(Long, Double)].collect().toSeq ===
+      Seq((3L, 3.0), (9L, 9.0)))
+    val ops = lake.history.select("operation").as[String].collect().toSeq
+    assert(ops === Seq("WRITE APPEND", "WRITE OVERWRITE")) // newest first
+    assert(!new java.io.File(s"$path${LakeTable.StageSuffix}").exists)
+    assert(!new java.io.File(s"$path${LakeTable.StageClaimSuffix}").exists)
+  }
+
+  test("a failed stage release is suppressed onto the operation's own error") {
+    val root = Files.createTempDirectory("graft_occ_release").toString
+    val path = s"$root/t"
+    val lake = LakeTable(spark, path).write(Seq((1L, 1.0)).toDF("id", "x").coalesce(1))
+    lake.addConstraint("x_pos", "x > 0"): Unit
+    // the release probes the stage for a manifest before it drops the
+    // claim: make that metadata call fail under an overwrite that fails
+    val conf = spark.sessionState.newHadoopConf()
+    LakeTable.fsDecoratorForTest = _ => {
+      val raw = new org.apache.hadoop.fs.RawLocalFileSystem {
+        override def getFileStatus(p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileStatus =
+          if (p.getName == LakeTable.SwapManifestName)
+            throw new java.io.IOException("release probe failed")
+          else super.getFileStatus(p)
+      }
+      raw.initialize(java.net.URI.create("file:///"), conf)
+      val f = new org.apache.hadoop.fs.LocalFileSystem(raw)
+      f.initialize(java.net.URI.create("file:///"), conf)
+      f
+    }
+    val e =
+      try intercept[IllegalArgumentException] {
+        lake.write(Seq((2L, -1.0)).toDF("id", "x").coalesce(1), SaveMode.Overwrite)
+      } finally LakeTable.fsDecoratorForTest = identity(_)
+    assert(e.getMessage.contains("x_pos"), e.getMessage)
+    assert(e.getSuppressed.exists(_.getMessage == "release probe failed"),
+      e.getSuppressed.map(_.toString).toSeq)
+    // the claim the failed release kept is freed by vacuumDebris
+    LakeTable(spark, path).vacuumDebris(): Unit
+    LakeTable(spark, path).write(Seq((3L, 3.0)).toDF("id", "x").coalesce(1))
+    assert(lake.read.as[(Long, Double)].collect().toSeq === Seq((3L, 3.0)))
+  }
+
   test("sequential rewrites never trip the check") {
     val root = Files.createTempDirectory("graft_occ_seq").toString
     val lake = LakeTable(spark, s"$root/t")

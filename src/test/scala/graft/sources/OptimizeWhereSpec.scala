@@ -83,6 +83,8 @@ class OptimizeWhereSpec extends SparkSpec {
     val path = tmp()
     val lake = fragmented(path)
     val before = lake.read.orderBy("id").as[(Long, String)].collect().toSeq
+    lake.compact()
+    assert(lake.partitionColumns() === Seq("part"))
     lake.optimize(Seq("id"))
     assert(lake.partitionColumns() === Seq("part"))
     lake.optimizeZorder(Seq("id"), numFiles = Some(2))
